@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 # Structured-field MatchTypes (reference parity: Zingg FieldDefinition,
 # /root/reference/02_Initial_Workflow_Part_A.py:113-136 enumerates FUZZY /
@@ -180,7 +180,6 @@ class ERConfig:
 
     # --- invariants ----------------------------------------------------------
     psnr_min_db: float = 40.0    # lossy decode invariant
-    extra: dict = field(default_factory=dict)
 
     def config_hash(self) -> str:
         payload = json.dumps(asdict(self), sort_keys=True, default=str)

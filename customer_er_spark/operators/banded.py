@@ -41,33 +41,12 @@ set, ~2.6x faster cold on the sf1.0 minhash bands.)
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def release_scratch(*dfs) -> None:
-    """Deterministically drop the kernel's lazy-checkpoint blocks attached
-    to DataFrames returned by banded_pairs (attribute `_er_scratch`).
-
-    Operators that eagerly materialize their output (minhash_lsh_pairs,
-    lsh_topk) call this right after the materialization barrier so no
-    cached blocks outlive the operator call (the no-leak invariant of
-    test_minhash_pairs_catalog_durable).  Lazy-composition callers
-    (simhash_pairs, the cosine prefix join, the pipeline's candidate
-    stage) cannot release mid-plan; their blocks are freed by the
-    ContextCleaner when the plan objects are garbage-collected.  After
-    release the raw pair plan must not be re-executed (the checkpoint
-    truncated its lineage) — callers release only once the output is
-    durably materialized."""
-    for df in dfs:
-        for ck in getattr(df, "_er_scratch", ()):
-            try:
-                ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:  # pragma: no cover - best effort, GC fallback
-                pass
+from customer_er_spark.operators.materialize import shared
 
 
 def salted_bands(
@@ -105,26 +84,14 @@ def salted_bands(
                 ).cast("int")
             ),
         )
-        # LAZY materialization barrier: the salted band rows feed THREE
-        # consumers (both self-join sides + the hot-band representative
-        # chain, plus band_stats when the caller keeps it), and Spark
-        # does not reuse the identical exchange subtrees across them —
-        # measured 3x evaluation of the caller's banding UDF without
-        # this.  eager=False keeps plan BUILDING side-effect-free (the
-        # incremental planner and dump_plans compose without executing);
-        # the first action computes the narrow (id, band_key, salt) rows
-        # once and every consumer reads the stored blocks.  Single-box
-        # caveat (non-recomputable blocks on executor loss) is the same
-        # accepted trade as operators/materialize.py's fallback mode —
-        # cluster deployments re-run the enclosing stage from its
-        # catalog-committed inputs.
     )
-    if not os.environ.get("SPARK_GRAFT_PLAN_FULL"):
-        # SPARK_GRAFT_PLAN_FULL is a plan-INTROSPECTION switch for
-        # tools/dump_r08_plans.py only: the executed plan always has the
-        # barrier (shown as Scan ExistingRDD); the full variant shows the
-        # subtree the barrier materializes.
-        salted = salted.localCheckpoint(eager=False)
+    # shared barrier: the salted band rows feed THREE consumers (both
+    # self-join sides + the hot-band representative chain, plus band_stats
+    # when the caller keeps it), and Spark does not reuse the identical
+    # exchange subtrees across them — measured 3x evaluation of the
+    # caller's banding UDF without it.  It is lazy (composing runs no
+    # job) and owned by the caller's operators/materialize.owned() scope.
+    salted = shared(salted)
     per_band = salted.groupBy("band_key").agg(
         F.first("n_members").alias("n_members"),
         F.first("n_salts").alias("n_salts"),
@@ -183,7 +150,9 @@ def banded_pairs(
                   protect a 2.5k-row distinct.
 
     Returns (pairs, band_stats); pairs has id_l < id_r, distinct unless
-    distinct=False (then multiplicity = number of shared buckets).
+    distinct=False (then multiplicity = number of shared buckets).  Both
+    read the salted rows' shared barrier: build and materialize them
+    inside one operators/materialize.owned() scope.
     """
     mem_struct = F.struct(F.col(id_col).alias("id"), *payload_cols)
     repart = bands.repartition(shuffle_partitions, "band_key")
@@ -258,8 +227,4 @@ def banded_pairs(
     pairs = pairs_within.unionByName(chain)
     if distinct:
         pairs = pairs.distinct()  # one shuffle on the pair key; AQE coalesces
-    # hand eagerly-materializing callers the lazy-checkpoint handle so they
-    # can release_scratch() once their output is durable
-    pairs._er_scratch = (salted,)
-    band_stats._er_scratch = (salted,)
     return pairs, band_stats

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from customer_er_spark.config import ERConfig
-from customer_er_spark.operators.banded import banded_pairs, salted_bands
+from customer_er_spark.operators.banded import banded_pairs
 
 
 def band_keys(signatures: DataFrame, cfg: ERConfig) -> DataFrame:
@@ -181,16 +181,6 @@ def band_write_options(cfg: ERConfig, n_records: int) -> dict:
     }
 
 
-def salted_buckets(bands: DataFrame, cfg: ERConfig) -> tuple[DataFrame, DataFrame]:
-    """(image_id, band_key)[, extra cols] -> (salted, band_stats).
-
-    Thin image-pipeline wrapper over the engine-wide kernel in
-    operators/banded.py (salted_bands) — see that module for the policy,
-    audit-trail, and execution-shape documentation.
-    """
-    return salted_bands(bands, cfg.max_band_size, id_col="image_id")
-
-
 def candidate_pairs_from_bands(
     bands: DataFrame, cfg: ERConfig
 ) -> tuple[DataFrame, DataFrame]:
@@ -233,6 +223,6 @@ def candidate_pairs(
     band-key collisions is never shuffled or materialized.
 
     band_stats (degraded bands exact + band-size histogram, see
-    salted_buckets) feeds the metrics table.
+    operators/banded.salted_bands) feeds the metrics table.
     """
     return candidate_pairs_from_bands(band_keys(signatures, cfg), cfg)

@@ -21,17 +21,20 @@ Node ids are the string image_ids: no int remapping pass, no collision risk
 at 10^12 rows, lexicographic min as the deterministic tie-break.
 
 Scale: every round is groupBy(min) + self-join on node id — both shuffle on
-the same key so the exchange is reused; lineage is truncated with an eager
-localCheckpoint every `checkpoint_every` rounds (on a cluster: a checkpoint
-table write via the catalog).  Convergence test = observed metrics
-(count, bit_xor of row hashes) collected BY the materialization action
-itself — zero extra jobs per round.
+the same key so the exchange is reused; every round's lineage is cut
+(operators/materialize.round_cut), and every `checkpoint_every` rounds
+with a catalog the edge set is committed as a checkpoint table instead.
+Convergence test = observed metrics (count, bit_xor of row hashes)
+collected BY the materialization action itself — zero extra jobs per
+round.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from customer_er_spark.operators.materialize import round_cut
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -138,15 +141,14 @@ def connected_components(
     caller's `inputs` lineage).  A killed run resumes the fixpoint from
     the last committed round instead of restarting at iteration 0 — the
     caller drops the table once its own downstream output is committed.
-    Without a catalog, lineage is truncated with ephemeral
-    localCheckpoints (single-process mode).
+    The other rounds cut lineage with operators/materialize.round_cut.
     """
     from pyspark.sql import Observation
 
     def _observed(e: DataFrame) -> tuple[DataFrame, Observation]:
         # order-independent set signature (count, bit_xor of row hashes),
         # attached as OBSERVED metrics so the materialization action
-        # (checkpoint write / localCheckpoint) computes it for free — one
+        # (checkpoint write / round cut) computes it for free — one
         # job per round instead of two (the r5 profile showed the
         # assignments stage as nearly all fixed per-round cost).  False
         # convergence needs a 2^-64 xor collision at equal count.
@@ -226,7 +228,7 @@ def connected_components(
             )
             new_edges = catalog.read_table(checkpoint_table)
         else:
-            new_edges = obs_e.localCheckpoint(eager=True)
+            new_edges = round_cut(obs_e)
         new_sig = (obs.get["n"], obs.get["x"])
         edges = new_edges
         if new_sig == sig:

@@ -32,6 +32,9 @@ from customer_er_spark.functions.minhash import make_minhash_udf
 from customer_er_spark.functions.text import normalize_caption
 from customer_er_spark.operators.banded import banded_pairs
 from customer_er_spark.operators.components import connected_components
+from customer_er_spark.operators.materialize import (
+    materialize, owned, scratch_name, shared,
+)
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -106,15 +109,31 @@ def minhash_lsh_pairs(
     expansion, hot-band sub-salting with representative chaining, distinct)
     -> join the 128-long signatures back onto the (small) distinct pair set
     for the Jaccard-estimate verify.  A duplicate flood of m identical docs
-    costs O(m * max_band_size) pairs, not O(m^2)."""
+    costs O(m * max_band_size) pairs, not O(m^2).
+
+    The output is an operators/materialize cut: committed to `catalog`
+    when one is given, else persisted and owned by the caller (free it
+    with unpersist()).  Everything cached to build it is released before
+    return."""
     cfg = cfg or ERConfig()
-    # persist: the signature is referenced three times (banding + both join
+    if table is None:
+        table = scratch_name("minhash_pairs", cfg.config_hash(), jaccard_min)
+    with owned():
+        return materialize(
+            _minhash_verified(docs, cfg, jaccard_min, id_col, text_col),
+            catalog, table, config_hash=cfg.config_hash(),
+        )
+
+
+def _minhash_verified(
+    docs: DataFrame, cfg: ERConfig, jaccard_min: float, id_col: str,
+    text_col: str,
+) -> DataFrame:
+    # shared: the signature is referenced three times (banding + both join
     # sides); without it the pandas UDF recomputes per reference.  In the
     # checkpointed pipeline (plans/pipeline.py) the catalog write plays this
-    # role durably.  Unpersisted below after the eager materialization of
-    # the (small) pair output, so a long-lived session does not accumulate
-    # cached blocks across queries.
-    sig = minhash_signatures(docs, cfg, id_col, text_col).persist()
+    # role durably.
+    sig = shared(minhash_signatures(docs, cfg, id_col, text_col))
     # distinct=False: the Jaccard estimate is a pure function of the pair
     # and the >= jaccard_min filter is highly selective, so candidates are
     # scored WITH band multiplicity and only the few survivors are deduped
@@ -165,26 +184,12 @@ def minhash_lsh_pairs(
             )
             .select("id_l", "id_r", "jacc")
         )
-    out = (
+    return (
         scored.where(F.col("jacc") >= jaccard_min)
         .select("id_l", "id_r", F.round("jacc", 6).alias("jacc"))
         .distinct()  # survivors only (jacc is pair-deterministic, so
         #              distinct here equals the old pre-score distinct)
     )
-    # materialize the verified pairs (small output), then free the cached
-    # signatures — downstream consumers read the committed/checkpointed
-    # result.  Pass a catalog for a durable snapshot commit (cluster mode);
-    # the default localCheckpoint is the single-box fallback.
-    from customer_er_spark.operators.materialize import materialize, scratch_name
-
-    if table is None:
-        table = scratch_name("minhash_pairs", cfg.config_hash(), jaccard_min)
-    out = materialize(out, catalog, table, config_hash=cfg.config_hash())
-    sig.unpersist()
-    from customer_er_spark.operators.banded import release_scratch
-
-    release_scratch(pairs)  # kernel checkpoint blocks: freed, not GC-deferred
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -330,7 +335,10 @@ def simhash_pairs(
     degrade safely to O(m * max_band_size) + chain connectivity).
 
     The full 64-bit Hamming gate runs in-partition before the distinct, so
-    random 2-chunk collisions die in codegen without being shuffled."""
+    random 2-chunk collisions die in codegen without being shuffled.
+
+    Ends in an output cut (operators/materialize): the returned DataFrame
+    is persisted and belongs to the caller, who frees it with unpersist()."""
     if 64 % chunks or 32 % (64 // chunks):
         raise ValueError("chunks must be one of 2, 4, 8, 16, 32, 64")
     if hamming_max > chunks - 2:
@@ -361,23 +369,24 @@ def simhash_pairs(
         f"(bit_count({{l}}.sim_hi ^ {{r}}.sim_hi) "
         f"+ bit_count({{l}}.sim_lo ^ {{r}}.sim_lo)) <= {hamming_max}"
     )
-    pairs, _stats = banded_pairs(
-        bands,
-        id_col="doc_id",
-        payload_cols=("sim_hi", "sim_lo"),
-        gate=gate,
-        max_band_size=max_band_size,
-        shuffle_partitions=shuffle_partitions,
-        emit_payload=True,
-    )
-    return pairs.select(
-        "id_l",
-        "id_r",
-        (
-            F.bit_count(F.col("sim_hi_l").bitwiseXOR(F.col("sim_hi_r")))
-            + F.bit_count(F.col("sim_lo_l").bitwiseXOR(F.col("sim_lo_r")))
-        ).cast("int").alias("hamming"),
-    )
+    with owned():
+        pairs, _stats = banded_pairs(
+            bands,
+            id_col="doc_id",
+            payload_cols=("sim_hi", "sim_lo"),
+            gate=gate,
+            max_band_size=max_band_size,
+            shuffle_partitions=shuffle_partitions,
+            emit_payload=True,
+        )
+        return materialize(pairs.select(
+            "id_l",
+            "id_r",
+            (
+                F.bit_count(F.col("sim_hi_l").bitwiseXOR(F.col("sim_hi_r")))
+                + F.bit_count(F.col("sim_lo_l").bitwiseXOR(F.col("sim_lo_r")))
+            ).cast("int").alias("hamming"),
+        ))
 
 
 def ngram_grams(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:

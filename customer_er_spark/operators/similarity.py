@@ -34,6 +34,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from customer_er_spark.operators.materialize import (
+    materialize, owned, scratch_name, shared,
+)
+
 
 def _dot_unrolled(left: str, right: str, dim: int) -> Column:
     terms = [
@@ -181,7 +185,12 @@ def lsh_topk(
     (functions/pairscore.py — bit-identical IEEE chain, measured 54 s ->
     ~1 s on the 14.5M-candidate sf1.0 bench stage); tables over
     `broadcast_score_max_rows` (~0.5 GB at dim 64) fall back to joining
-    the vectors onto the distinct candidate pairs, the prior plan."""
+    the vectors onto the distinct candidate pairs, the prior plan.
+
+    The output is an operators/materialize cut: committed to `catalog`
+    when one is given, else persisted and owned by the caller (free it
+    with unpersist()).  Everything cached to build it is released before
+    return."""
     from customer_er_spark.operators.banded import banded_pairs
 
     planes = hyperplane_keys(dim, n_planes, n_tables, seed)
@@ -199,6 +208,10 @@ def lsh_topk(
 
     from customer_er_spark.functions.partitioning import fan_out
 
+    if table is None:  # per-parameters name: no cross-call clobber
+        table = scratch_name(
+            "lsh_topk", k, dim, n_planes, n_tables, seed, max_bucket_size
+        )
     # adaptive fan-out before the bucket UDF: a compact parquet input (one
     # row group) otherwise runs the whole Python stage on ONE task (same
     # lesson as signatures.compute_signatures); no-op on well-split scans.
@@ -209,54 +222,43 @@ def lsh_topk(
         shuffle_partitions,
         "vid",
     )
-    # persist: referenced by the banding pass and the scorer (broadcast
-    # collect or both verify join sides); unpersisted after the (small)
-    # top-k output is materialized.
-    base = base.persist()
-    bands = base.select(
-        "vid", F.explode(bucket_udf(F.col("vec"))).alias("band_key")
-    )
-    upairs, _stats = banded_pairs(
-        bands,
-        id_col="vid",
-        max_band_size=max_bucket_size,
-        shuffle_partitions=shuffle_partitions,
-    )
-    # candidates are directed (each member of a pair queries the other);
-    # the scorer mirrors each undirected pair itself, so the pair subtree
-    # enters the plan ONCE (a unionAll of two projections of `upairs`
-    # would compute the expansion+distinct twice — no exchange reuse)
-    scored = _cosine_scored(
-        embeddings.sparkSession,
-        upairs.select(
-            F.col("id_l").alias("query_id"), F.col("id_r").alias("neighbor_id")
-        ),
-        base,
-        dim,
-        broadcast_score_max_rows,
-        mirror=True,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    from customer_er_spark.operators.materialize import materialize, scratch_name
-
-    if table is None:  # per-parameters name: no cross-call clobber
-        table = scratch_name(
-            "lsh_topk", k, dim, n_planes, n_tables, seed, max_bucket_size
+    with owned():
+        # shared: referenced by the banding pass and the scorer (broadcast
+        # collect or both verify join sides)
+        base = shared(base)
+        bands = base.select(
+            "vid", F.explode(bucket_udf(F.col("vec"))).alias("band_key")
         )
-    out = materialize(  # n*k rows — small; durable when a catalog is given
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank"),
-        catalog,
-        table,
-    )
-    base.unpersist()
-    from customer_er_spark.operators.banded import release_scratch
-
-    release_scratch(upairs)  # kernel checkpoint blocks: freed, not GC-deferred
-    return out
+        upairs, _stats = banded_pairs(
+            bands,
+            id_col="vid",
+            max_band_size=max_bucket_size,
+            shuffle_partitions=shuffle_partitions,
+        )
+        # candidates are directed (each member of a pair queries the other);
+        # the scorer mirrors each undirected pair itself, so the pair subtree
+        # enters the plan ONCE (a unionAll of two projections of `upairs`
+        # would compute the expansion+distinct twice — no exchange reuse)
+        scored = _cosine_scored(
+            embeddings.sparkSession,
+            upairs.select(
+                F.col("id_l").alias("query_id"), F.col("id_r").alias("neighbor_id")
+            ),
+            base,
+            dim,
+            broadcast_score_max_rows,
+            mirror=True,
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("cos").desc(), F.col("neighbor_id").asc()
+        )
+        return materialize(  # n*k rows — small; durable when a catalog is given
+            scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank"),
+            catalog,
+            table,
+        )
 
 
 def kmeans_centroids(
@@ -436,7 +438,8 @@ def ivf_topk(
 
     Training cost is constant, not table-sized: the quantizer fits on a
     bounded deterministic sample (max_train rows; see kmeans_centroids) —
-    one cheap count + one pruned sample scan, zero full-table passes."""
+    one cheap count + one pruned sample scan, zero full-table passes.
+    The output is a materialize cut, owned as in lsh_topk."""
     cents = kmeans_centroids(
         embeddings, n_centroids, dim, iters, id_col, vec_col, max_train=max_train
     )
@@ -450,44 +453,41 @@ def ivf_topk(
         32,
         "vid",
     )
-    base = base.persist()
-
-    assigned = base.withColumn("cell", _assign_cells_udf(cents)(F.col("vec")))
-    # cap degenerate cells: deterministic hash ranking, bounded members
-    wcell = Window.partitionBy("cell").orderBy(F.xxhash64("vid"), F.col("vid"))
-    members = (
-        assigned.withColumn("rn", F.row_number().over(wcell))
-        .where(F.col("rn") <= cell_cap)
-        .select("cell", F.col("vid").alias("neighbor_id"))
-    )
-    probes = base.select(
-        F.col("vid").alias("query_id"),
-        F.explode(_probe_cells_udf(cents, n_probe)(F.col("vec"))).alias("cell"),
-    )
-    cand = (
-        probes.join(members, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    scored = _cosine_scored(
-        embeddings.sparkSession, cand, base, dim, max_rows=1_000_000
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    from customer_er_spark.operators.materialize import materialize, scratch_name
-
     if table is None:  # per-parameters name: no cross-call clobber
         table = scratch_name(
             "ivf_topk", k, dim, n_centroids, n_probe, iters, cell_cap, max_train
         )
-    out = materialize(
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank"),
-        catalog,
-        table,
-    )
-    base.unpersist()
-    return out
+    with owned():
+        base = shared(base)
+
+        assigned = base.withColumn("cell", _assign_cells_udf(cents)(F.col("vec")))
+        # cap degenerate cells: deterministic hash ranking, bounded members
+        wcell = Window.partitionBy("cell").orderBy(F.xxhash64("vid"), F.col("vid"))
+        members = (
+            assigned.withColumn("rn", F.row_number().over(wcell))
+            .where(F.col("rn") <= cell_cap)
+            .select("cell", F.col("vid").alias("neighbor_id"))
+        )
+        probes = base.select(
+            F.col("vid").alias("query_id"),
+            F.explode(_probe_cells_udf(cents, n_probe)(F.col("vec"))).alias("cell"),
+        )
+        cand = (
+            probes.join(members, "cell")
+            .where(F.col("query_id") != F.col("neighbor_id"))
+            .select("query_id", "neighbor_id")
+            .distinct()
+        )
+        scored = _cosine_scored(
+            embeddings.sparkSession, cand, base, dim, max_rows=1_000_000
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("cos").desc(), F.col("neighbor_id").asc()
+        )
+        return materialize(
+            scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank"),
+            catalog,
+            table,
+        )

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from customer_er_spark.operators.banded import banded_pairs
+from customer_er_spark.operators.materialize import materialize, owned
 
 # 6 hex chars of md5 -> 24-bit integer.  Mirrored verbatim by the DuckDB
 # oracle (strpos arithmetic over the same hex prefix), so bucket ids agree
@@ -125,7 +126,23 @@ def sparse_cosine_join(
     unrounded cosine >= threshold (see module docstring for the
     completeness bound and the flood caveat).  with_stats=True also returns
     the banded kernel's band_stats audit DataFrame.
+
+    Every returned DataFrame is an output cut (operators/materialize):
+    persisted and owned by the caller, who frees it with unpersist().
     """
+    with owned():
+        out, band_stats = _sparse_cosine_join(
+            feats, threshold, max_band_size, shuffle_partitions
+        )
+        if with_stats:
+            return materialize(out), materialize(band_stats)
+        return materialize(out)
+
+
+def _sparse_cosine_join(
+    feats: DataFrame, threshold: float, max_band_size: int,
+    shuffle_partitions: int,
+) -> tuple[DataFrame, DataFrame]:
     t2 = float(threshold) * float(threshold)
     norms = feats.groupBy("vec_id").agg(
         F.sum(F.col("weight") * F.col("weight")).alias("n2")
@@ -192,7 +209,7 @@ def sparse_cosine_join(
             F.round(cos, 6).alias("cos"),
         )
     )
-    return (out, band_stats) if with_stats else out
+    return out, band_stats
 
 
 def cosine_near_dup_pairs(

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from customer_er_spark.functions.hashing import shingle_hashes
+from customer_er_spark.operators.materialize import materialize, owned, shared
 
 # duplicate_spans position-explode chunk: bounds the sequence() array any
 # single document can materialize in one Generate row (4096 ints ~ 32 KB)
@@ -350,7 +351,17 @@ def duplicate_spans(
     in one Generate row — a 100 MB doc costs a ~25k-element outer array,
     not an 800 MB one.  md5 collisions (~2^-128 per pair) are the
     standard fingerprinting trade the oracle replays verbatim.
+
+    Ends in an output cut (operators/materialize): the returned DataFrame
+    is persisted and belongs to the caller, who frees it with unpersist().
     """
+    with owned():
+        return materialize(_duplicate_spans(docs, min_len, id_col, text_col))
+
+
+def _duplicate_spans(
+    docs: DataFrame, min_len: int, id_col: str, text_col: str
+) -> DataFrame:
     from pyspark.sql import Window
 
     L = int(min_len)
@@ -393,10 +404,7 @@ def duplicate_spans(
     # residual skewed join is AQE-splittable, which a window never is.
     # Same rows out: a position survives iff its gram hash occurs ≥ 2
     # times, exactly the predicate the window computed.
-    import os as _os
-
-    if not _os.environ.get("SPARK_GRAFT_PLAN_FULL"):  # see banded.salted_bands
-        grams = grams.localCheckpoint(eager=False)  # two consumers, one compute
+    grams = shared(grams)  # two consumers, one compute
     dup_gh = (
         grams.groupBy("gh")
         .agg(F.count("*").alias("c"))
@@ -444,11 +452,18 @@ def dedup_substrings(
     gap is substring(t, lag(span_end, default 1), span_start - lag);
     ordered concatenation via array_sort(collect_list(struct)) keeps the
     whole thing deterministic and SQL-replayable (string_agg ... ORDER BY
-    on the oracle side).
+    on the oracle side).  Ends in an output cut, like duplicate_spans.
     """
+    with owned():
+        return materialize(_dedup_substrings(docs, min_len, id_col, text_col))
+
+
+def _dedup_substrings(
+    docs: DataFrame, min_len: int, id_col: str, text_col: str
+) -> DataFrame:
     from pyspark.sql import Window
 
-    spans = duplicate_spans(docs, min_len=min_len, id_col=id_col, text_col=text_col)
+    spans = _duplicate_spans(docs, min_len, id_col, text_col)
     base = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("t")
     )

@@ -299,17 +299,17 @@ def verify_pairs(
             )
             .select("id_l", "id_r", "hamming")
         )
-    # narrow (3 columns) but feeds both branches: materialize once — a
-    # durable snapshot commit when a catalog is supplied (cluster mode),
-    # localCheckpoint otherwise (single-box fallback).  The default scratch
-    # prefix folds in the config hash so two pipelines sharing one catalog
-    # never clobber each other's intermediates.
-    from customer_er_spark.operators.materialize import materialize
+    # narrow (3 columns) but feeds both branches: a shared barrier — a
+    # durable snapshot commit when a catalog is supplied, else a lazy
+    # persist owned by the caller's owned() scope (operators/materialize).
+    # The default scratch prefix folds in the config hash so two pipelines
+    # sharing one catalog never clobber each other's intermediates.
+    from customer_er_spark.operators.materialize import shared
 
     if table_prefix is None:
         table_prefix = f"verify_tmp_{cfg.config_hash()[:8]}"
-    ph = materialize(ph, catalog, f"{table_prefix}_hamming",
-                     config_hash=cfg.config_hash())
+    ph = shared(ph, catalog, f"{table_prefix}_hamming",
+                config_hash=cfg.config_hash())
     passed = ph.where(F.col("hamming") <= F.lit(cfg.phash_hamming_max))
     failed = ph.where(F.col("hamming") > F.lit(cfg.phash_hamming_max))
 
@@ -331,7 +331,7 @@ def verify_pairs(
         / F.lit(float(cfg.num_hashes)),
     )
     # feeds the LCS refinement subquery AND the final scoring scan
-    base = materialize(
+    base = shared(
         base.drop("mh_l", "mh_r", "phash_l", "phash_r"),
         catalog,
         f"{table_prefix}_base",

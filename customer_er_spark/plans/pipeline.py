@@ -38,6 +38,7 @@ from customer_er_spark.operators.candidates import (
     with_band_bucket,
 )
 from customer_er_spark.operators.components import connected_components
+from customer_er_spark.operators.materialize import owned
 from customer_er_spark.operators.signatures import compute_signatures
 from customer_er_spark.operators.verify import verify_pairs
 from customer_er_spark.plans.lineage import StageMetrics
@@ -65,9 +66,9 @@ def run_initial(
         if catalog.has_snapshot(name, ch, inputs):
             summary[name] = {"resumed": True, **catalog.table_meta(name)["counts"]}
             return catalog.read_table(name)
-        df = build()
-        manifest = catalog.write_table(df, name, config_hash=ch, inputs=inputs,
-                                       **write_kwargs)
+        with owned():  # the stage's shared barriers end with its commit
+            manifest = catalog.write_table(build(), name, config_hash=ch,
+                                           inputs=inputs, **write_kwargs)
         out = catalog.read_table(name)
         rows_out = manifest["counts"]["rows_out"]
         metrics.record(

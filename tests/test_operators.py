@@ -470,7 +470,7 @@ def test_minhash_pairs_catalog_durable(spark, catalog):
 
 def test_lsh_and_ivf_topk_catalog_durable(spark, catalog, embeddings):
     """The ANN operators' catalog mode must produce the same rows as the
-    localCheckpoint mode and leave a committed snapshot."""
+    no-catalog mode and leave a committed snapshot."""
     from customer_er_spark.operators.materialize import scratch_name
     from customer_er_spark.operators.similarity import ivf_topk, lsh_topk
 

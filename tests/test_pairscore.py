@@ -133,3 +133,40 @@ def test_fan_out_is_noop_on_well_split_input(spark):
     assert fan_out(wide, 8).rdd.getNumPartitions() == 16  # untouched
     narrow = spark.range(0, 1000, numPartitions=1)
     assert fan_out(narrow, 8).rdd.getNumPartitions() == 8
+
+
+@pytest.mark.parametrize("scorer", ["cosine", "equality_fraction"])
+def test_scorer_rejects_id_missing_from_matrix(spark, scorer):
+    """A pair id absent from the broadcast matrix raises instead of being
+    scored against the row searchsorted lands on."""
+    from customer_er_spark.functions import pairscore
+
+    ids = np.array([10, 20, 30], dtype=np.int64)
+    mat = np.arange(12, dtype=np.int64).reshape(3, 4)
+    cand = spark.createDataFrame([(10, 20), (20, 25)], "id_l long, id_r long")
+    if scorer == "cosine":
+        out = pairscore.cosine_pair_scores(
+            spark, cand, ids, mat.astype(np.float64), l_col="id_l",
+            r_col="id_r")
+    else:
+        out = pairscore.equality_fraction_pair_scores(spark, cand, ids, mat, 4)
+    with pytest.raises(Exception, match="missing from the broadcast matrix"):
+        out.collect()
+    ok = cand.where("id_r != 25")
+    if scorer == "cosine":
+        ok = pairscore.cosine_pair_scores(
+            spark, ok, ids, mat.astype(np.float64), l_col="id_l",
+            r_col="id_r")
+    else:
+        ok = pairscore.equality_fraction_pair_scores(spark, ok, ids, mat, 4)
+    assert ok.count() == 1
+
+
+def test_collect_bounded_matrix_rejects_ragged_rows(spark):
+    from customer_er_spark.functions.pairscore import collect_bounded_matrix
+
+    ragged = spark.createDataFrame(
+        [(1, [1, 2, 3]), (2, [4, 5])], "doc_id long, minhash array<long>"
+    )
+    with pytest.raises(ValueError, match="ragged"):
+        collect_bounded_matrix(ragged, "doc_id", "minhash", np.int64, 10)

@@ -61,15 +61,13 @@ def main() -> None:
          "pandas UDFs)", sig)
     pairs, _ = candidate_pairs(sig, cfg)
     dump("candidate pairs (band explode -> ONE repartition(band_key) -> "
-         "window bucket-size count -> sub-band salt -> lazy-checkpoint "
-         "barrier (Scan ExistingRDD below) -> co-partitioned shuffled-hash "
-         "self-join on (band_key, salt) with inline Hamming gate in the "
-         "join condition -> distinct; rep chain for hot bands.  r8: the "
-         "join replaced interpreted higher-order pair expansion — see "
-         "plans/r08/*_after_full.txt for the pre-barrier subtree)",
+         "window bucket-size count -> sub-band salt -> co-partitioned "
+         "shuffled-hash self-join on (band_key, salt) with inline Hamming "
+         "gate in the join condition -> distinct; rep chain for hot bands.  "
+         "Composed outside an owned() scope, so the salted rows' shared "
+         "barrier is not taken and the full subtree shows)",
          pairs)
-    # verify_pairs eagerly materializes its attach-join checkpoint, so give
-    # it a small slice (the plan SHAPE is what we're dumping)
+    # a small slice: the plan SHAPE is what we're dumping
     from customer_er_spark.operators.verify import verify_pairs
 
     small_sig = compute_signatures(images.limit(500), cfg)
