@@ -47,9 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class SparkCatalog:
-    backend = "parquet"  # vs IcebergCatalog's "iceberg" — readers that
-    #                      prune driver-side branch on this
-
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir
@@ -118,8 +115,8 @@ class SparkCatalog:
     # -- path relativity --------------------------------------------------------
     # Manifests record snapshot dirs and data files RELATIVE to the catalog
     # base dir (r6 advice): a moved/renamed catalog keeps working — reads
-    # and pruned scans resolve against the CURRENT base dir.  Legacy
-    # absolute entries still resolve (back-compat).
+    # resolve against the CURRENT base dir.  Legacy absolute entries still
+    # resolve (back-compat).
     def _abs(self, p: str) -> str:
         return p if os.path.isabs(p) else os.path.join(self.base_dir, p)
 
@@ -134,34 +131,6 @@ class SparkCatalog:
     def _paths(self, meta: dict) -> list[str]:
         return [self._abs(p) for p in (meta.get("paths") or [meta["path"]])]
 
-    def resolve_file(self, entry: dict) -> str:
-        """Absolute path of one manifest data-file entry."""
-        return self._abs(entry["file"])
-
-    def file_bloom(self, entry: dict, rg: int | None = None) -> dict | None:
-        """Key bloom for one data-file entry (rg=None) or one of its row
-        groups (rg=g): inline (legacy manifests) or from the snapshot
-        dir's `_blooms.json` sidecar (the poor-man's Iceberg puffin file
-        — blooms live next to the data files they describe, written once
-        per commit, never rewritten, so the manifest itself stays small
-        no matter how many appends accumulate)."""
-        if rg is None and "bloom" in entry:
-            return entry["bloom"]
-        if not entry.get("bloom_sidecar"):
-            return None
-        full = self._abs(entry["file"])
-        spath = os.path.join(
-            full[: -len(entry["path"]) - 1], "_blooms.json"
-        )
-        cache = getattr(self, "_bloom_sidecars", None)
-        if cache is None:
-            cache = self._bloom_sidecars = {}
-        if spath not in cache:  # sidecars are immutable per snapshot dir
-            with open(spath) as f:
-                cache[spath] = json.load(f)
-        key = entry["path"] if rg is None else f"{entry['path']}#rg{rg}"
-        return cache[spath].get(key)
-
     # -- IO -------------------------------------------------------------------
     def _commit(
         self,
@@ -173,9 +142,6 @@ class SparkCatalog:
         partition_by: list[str] | None,
         extra_meta: dict | None,
         overwrite_schema: bool,
-        bloom_col: str | None = None,
-        bloom_max_rows: int = 100_000,
-        write_options: dict | None = None,
     ) -> dict:
         self._check_schema(name, df.schema.jsonValue(), overwrite_schema, mode)
         snap_id = f"snap-{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
@@ -183,48 +149,24 @@ class SparkCatalog:
         os.makedirs(tdir, exist_ok=True)
         data_dir = os.path.join(tdir, snap_id)
         writer = df.write.mode("overwrite")
-        if write_options:  # e.g. maxRecordsPerFile for pruning-grained files
-            writer = writer.options(**write_options)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
         return self._finalize_commit(
             df.schema.jsonValue(), name, mode, snap_id, data_dir,
             config_hash, inputs, extra_meta,
-            bloom_col=bloom_col, bloom_max_rows=bloom_max_rows,
         )
 
     @staticmethod
-    def _footer_files(
-        data_dir: str,
-        bloom_col: str | None = None,
-        bloom_max_rows: int = 100_000,
-        rel_to: str | None = None,
-    ) -> list[dict]:
+    def _footer_files(data_dir: str, rel_to: str | None = None) -> list[dict]:
         """Per-file row counts by summing parquet footers (pyarrow,
         recursive for partitioned layouts, thread pool — footer reads are
         I/O-bound and release the GIL) — no Spark job at all: a count()
         would schedule a scan per commit, and recomputing the plan is
         exactly what the committed files exist to avoid.
 
-        When `bloom_col` names an int64 key column, every file with at
-        most `bloom_max_rows` rows also gets, PER PARQUET ROW GROUP:
-        (a) the column's min/max in the manifest entry's `row_groups`
-        list (free — parquet already stores column stats in the footer;
-        files are written key-sorted, so each row group covers a narrow
-        contiguous key range), and (b) a bloom filter over that row
-        group's keys, written to the snapshot dir's `_blooms.json`
-        SIDECAR keyed `<path>#rg<i>` (the poor-man's Iceberg puffin file;
-        the underscore name makes Spark's scan ignore it).  Row groups —
-        not files — are the skip granule: readers prune row groups
-        driver-side from these entries and push the matching key IN-set
-        into the parquet scan so executors skip the same row groups via
-        dictionary/stats pushdown.  Larger files skip the blooms by
-        design: they belong to bulk snapshots where hash-bucket partition
-        pruning is the effective lever.
-
         File paths are recorded relative to `rel_to` (the catalog base
-        dir) so a moved catalog keeps pruning (r6 advice)."""
+        dir) so a moved catalog keeps resolving them (r6 advice)."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
@@ -235,64 +177,16 @@ class SparkCatalog:
                 if f.endswith(".parquet"):
                     files.append(os.path.join(root, f))
 
-        def one(full: str) -> tuple[dict, dict]:
-            pf = pq.ParquetFile(full)
-            md = pf.metadata
-            entry = {
+        def one(full: str) -> dict:
+            return {
                 "path": os.path.relpath(full, data_dir),
                 "file": os.path.relpath(full, rel_to) if rel_to else full,
-                "rows": md.num_rows,
+                "rows": pq.ParquetFile(full).metadata.num_rows,
                 "bytes": os.path.getsize(full),
             }
-            blooms: dict = {}
-            if bloom_col is not None and 0 < entry["rows"] <= bloom_max_rows:
-                from customer_er_spark.functions import bloom
-
-                ci = next(
-                    i
-                    for i in range(md.row_group(0).num_columns)
-                    if md.row_group(0).column(i).path_in_schema == bloom_col
-                )
-                keys = pf.read(columns=[bloom_col]).column(0).to_numpy()
-                entry["kmin"] = int(keys.min())
-                entry["kmax"] = int(keys.max())
-                entry["bloom_sidecar"] = True
-                rgs = []
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    st = rg.column(ci).statistics
-                    rgs.append(
-                        {
-                            "rows": rg.num_rows,
-                            "bytes": sum(
-                                rg.column(j).total_compressed_size
-                                for j in range(rg.num_columns)
-                            ),
-                            "kmin": int(st.min),
-                            "kmax": int(st.max),
-                        }
-                    )
-                # one vectorized pass for ALL the file's row-group blooms:
-                # per-row-group build() calls were GIL-bound across the
-                # thread pool (3-4s per commit at ~1.5k row groups;
-                # <0.1s sliced)
-                for g, bl in enumerate(
-                    bloom.build_sliced(keys, [r["rows"] for r in rgs])
-                ):
-                    blooms[f"{entry['path']}#rg{g}"] = {
-                        "col": bloom_col, **bl,
-                    }
-                entry["row_groups"] = rgs
-            return entry, blooms
 
         with ThreadPoolExecutor(min(16, max(1, len(files)))) as ex:
-            results = list(ex.map(one, files))
-        data_files = sorted((e for e, _ in results), key=lambda d: d["path"])
-        blooms = {k: v for _, b in results for k, v in b.items()}
-        if blooms:
-            with open(os.path.join(data_dir, "_blooms.json"), "w") as f:
-                json.dump(blooms, f)
-        return data_files
+            return sorted(ex.map(one, files), key=lambda d: d["path"])
 
     def _finalize_commit(
         self,
@@ -304,12 +198,8 @@ class SparkCatalog:
         config_hash: str,
         inputs: dict[str, str] | None,
         extra_meta: dict | None,
-        bloom_col: str | None = None,
-        bloom_max_rows: int = 100_000,
     ) -> dict:
-        data_files = self._footer_files(
-            data_dir, bloom_col, bloom_max_rows, rel_to=self.base_dir
-        )
+        data_files = self._footer_files(data_dir, rel_to=self.base_dir)
         n_files = len(data_files)
         rows_new = sum(d["rows"] for d in data_files)
         old = self.table_meta(name)
@@ -317,10 +207,7 @@ class SparkCatalog:
             paths = (old.get("paths") or [old["path"]]) + [self._rel(data_dir)]
             rows_out = old["counts"]["rows_out"] + rows_new
             # the manifest's file list spans the WHOLE snapshot (Iceberg
-            # semantics): appended entries accumulate so readers can prune
-            # at file granularity across every commit.  Pre-upgrade
-            # entries without a "file" key disable pruning for their
-            # commit (readers fall back to the full scan).
+            # semantics): appended entries accumulate across every commit
             data_files = list(old.get("data_files") or []) + data_files
             n_files = len(data_files)
         else:
@@ -365,25 +252,16 @@ class SparkCatalog:
         partition_by: list[str] | None = None,
         extra_meta: dict | None = None,
         overwrite_schema: bool = False,
-        bloom_col: str | None = None,
-        bloom_max_rows: int = 100_000,
-        write_options: dict | None = None,
     ) -> dict:
         """Write df as a fresh snapshot and commit it atomically.
 
         The data lands in  <table>/snap-<id>/  first; the manifest rename is
         the commit point, so a killed run never exposes a half-written
         snapshot (the kill-and-rerun resumability test relies on this).
-
-        `bloom_col` embeds a per-file key bloom in the manifest for files
-        up to `bloom_max_rows` rows (see _footer_files) — readers can
-        prune data files driver-side by key set.
         """
         return self._commit(
             df, name, "overwrite", config_hash, inputs, partition_by,
             extra_meta, overwrite_schema,
-            bloom_col=bloom_col, bloom_max_rows=bloom_max_rows,
-            write_options=write_options,
         )
 
     def append_table(
@@ -394,9 +272,6 @@ class SparkCatalog:
         inputs: dict[str, str] | None = None,
         partition_by: list[str] | None = None,
         extra_meta: dict | None = None,
-        bloom_col: str | None = None,
-        bloom_max_rows: int = 100_000,
-        write_options: dict | None = None,
     ) -> dict:
         """Append df as a new snapshot = old data files + one new dir.
 
@@ -408,8 +283,6 @@ class SparkCatalog:
         return self._commit(
             df, name, "append", config_hash, inputs, partition_by,
             extra_meta, overwrite_schema=False,
-            bloom_col=bloom_col, bloom_max_rows=bloom_max_rows,
-            write_options=write_options,
         )
 
     def write_table_local(
@@ -461,18 +334,16 @@ class SparkCatalog:
         )
 
     def read_table(self, name: str) -> DataFrame:
+        """Read the current snapshot with the schema its manifest records:
+        a 0-row partitioned write leaves no parquet file to infer from."""
+        from pyspark.sql.types import StructType
+
         meta = self.table_meta(name)
         if meta is None:
             raise FileNotFoundError(f"table {name!r} has no committed snapshot")
-        return self.spark.read.parquet(*self._paths(meta))
-
-    def table_files(self, name: str) -> list | None:
-        """Per-file entries of the current snapshot (path, rows, bytes,
-        key range, bloom-sidecar marker) — the manifest's data_files list;
-        IcebergCatalog serves the same shape from its `.files` metadata
-        table, so scan-pruning readers are backend-agnostic."""
-        meta = self.table_meta(name)
-        return meta.get("data_files") if meta else None
+        return self.spark.read.schema(
+            StructType.fromJson(meta["schema"])
+        ).parquet(*self._paths(meta))
 
     # -- tiny state store (streaming batch fence etc.) -------------------------
     def _state_path(self) -> str:

@@ -132,43 +132,12 @@ class ERConfig:
                                  # operators/candidates.py skew policy).
     shuffle_partitions: int = 32
     cc_checkpoint_every: int = 3  # connected-components lineage truncation
-    # bounded driver fast path for connected components (same pattern as
-    # prune_max_keys): a pair graph of at most this many raw edges is
-    # collected (~0.4 GB Arrow at the default) and solved by a vectorized
-    # driver union-find in one job; larger graphs run the distributed
-    # large-star/small-star rounds unchanged.
+    # bounded driver fast path for connected components: a pair graph of
+    # at most this many raw edges is collected (~0.4 GB Arrow at the
+    # default) and solved by a vectorized driver union-find in one job;
+    # larger graphs run the distributed large-star/small-star rounds
+    # unchanged.
     cc_driver_max_edges: int = 2_000_000
-
-    # --- priors_bands physical layout / increment scan pruning ---------------
-    # The committed registry band table is hash-partitioned into
-    # `band_buckets` directories by pmod(band_key, band_buckets) (Iceberg:
-    # bucket(K, band_key)) and every data file whose row count is at most
-    # `bloom_max_keys` carries a band_key bloom filter in the manifest
-    # (functions/bloom.py).  run_link prunes the registry scan driver-side
-    # to the increment's touched buckets and bloom-matching files, so the
-    # per-increment registry I/O is bounded by actual band collisions, not
-    # registry size.  `prune_max_keys` caps the driver-side collect of the
-    # increment's distinct band keys; a larger increment falls back to
-    # bucket-level pruning only (its scan is registry-sized anyway).
-    band_buckets: int = 64
-    bloom_max_keys: int = 100_000
-    prune_max_keys: int = 2_000_000
-    # granule knobs: the writer keeps ONE file per bucket per snapshot
-    # (many small files are a fork-storm on Hadoop's local FS — chmod is
-    # exec'd per created file — and a listing/scheduling tax on any FS)
-    # and instead sizes parquet ROW GROUPS as the skip granule: target
-    # `band_granule_rows` rows per row group, at most `band_max_granules`
-    # row groups per bulk snapshot.  Each row group gets a key range in
-    # the manifest (free from the footer) and a bloom in the snapshot
-    # sidecar, and the link's planner emits a (file, row-group) read plan
-    # executed by an Arrow granule scan — files stay few, skipping stays
-    # fine (r6 verdict #3 — measured: the one-granule-per-bucket layout
-    # read 64/64 files ≙ 100% of bytes at an 8k registry because ~600
-    # real phash chunk key matches touch every large granule; at the
-    # 33-49-row effective granules of the default sizing the same
-    # increment reads 20% of bytes — rationale in band_write_options).
-    band_granule_rows: int = 128
-    band_max_granules: int = 2_560
 
     # --- structured-field scoring (FieldDef list; see MATCH_TYPES above) ----
     # when non-empty, score = (w_caption*caption_sim + w_image*image_sim

@@ -115,72 +115,6 @@ def bands_per_record(cfg: ERConfig) -> int:
     return cfg.bands + ph
 
 
-def with_band_bucket(bands: DataFrame, cfg: ERConfig) -> DataFrame:
-    """Attach the physical-layout bucket column pmod(band_key,
-    cfg.band_buckets) — the hash-bucket partition key of the committed
-    priors_bands table (Iceberg analog: bucket(K, band_key)).  Writers
-    partition by it; the incremental link prunes its registry scan to the
-    buckets the increment touches."""
-    return bands.select(
-        "band_key", "image_id", "phash",
-        F.pmod(F.col("band_key"), F.lit(cfg.band_buckets))
-        .cast("int")
-        .alias("band_bucket"),
-    )
-
-
-def band_sorted(bands_with_bucket: DataFrame, cfg: ERConfig) -> DataFrame:
-    """Physical ordering for the committed priors_bands table: partitioned
-    on band_bucket (one data file per bucket per snapshot), sorted by
-    (band_bucket, band_key) within partitions — combined with the small
-    parquet row groups of band_write_options, each ROW GROUP covers a
-    narrow contiguous band_key range, so the per-row-group key range +
-    bloom recorded at commit time discriminate and the incremental link's
-    scan pruning fires at granule level (Iceberg analog: bucket(K,
-    band_key) partitioning + sorted write order + parquet column
-    stats/blooms)."""
-    return bands_with_bucket.repartition(
-        cfg.shuffle_partitions, "band_bucket"
-    ).sortWithinPartitions("band_bucket", "band_key")
-
-
-# nominal buffered bytes/row of the 3-column band schema for the writer's
-# parquet.block.size meter.  The java writer meters encoded column
-# buffers and only checks size every >=100 records, so the EFFECTIVE
-# granule is data-dependent: measured 33-49 rows/row-group on the
-# increment-bench corpora and ~125 on the 6k pipeline corpus at the
-# resulting 4096-byte block — both inside the range where per-row-group
-# key ranges + blooms discriminate (20% of registry bytes read at the
-# 8k-registry rebuild, bench_out/increment_scaling.json).
-_BAND_ROW_BYTES = 32
-
-
-def band_write_options(cfg: ERConfig, n_records: int) -> dict:
-    """Parquet row-group sizing for a priors_bands commit of `n_records`
-    signature rows: target cfg.band_granule_rows rows per row group,
-    capped at cfg.band_max_granules row groups for the snapshot (bulk
-    snapshots get bigger granules — at huge registries the per-granule
-    manifest/sidecar metadata would otherwise grow without bound).  Row
-    groups, not files, are the skip unit: file count stays one per bucket
-    (local-FS file creation forks a chmod per file under Hadoop — a
-    measured 30-60s fork storm at ~1800 files — and every extra file is
-    listing/scheduling overhead on any FS).  Granule sizing is a
-    write-cost / scan-precision tradeoff: the 4096-byte block from the
-    128-row x 32-byte nominal target reads 20% of registry bytes at the
-    8k-registry rebuild for ~1.2s extra writer flush per 96k rows (the
-    once-dominant cost here — 3-4s of GIL-contended per-row-group bloom
-    builds in the commit walk — is gone: bloom.build_sliced)."""
-    rows = bands_per_record(cfg) * max(0, n_records)
-    block = _BAND_ROW_BYTES * max(
-        cfg.band_granule_rows,
-        rows // cfg.band_max_granules,
-    )
-    return {
-        "parquet.block.size": str(block),
-        "parquet.page.size": str(min(block, 1 << 20)),
-    }
-
-
 def candidate_pairs_from_bands(
     bands: DataFrame, cfg: ERConfig
 ) -> tuple[DataFrame, DataFrame]:

@@ -119,8 +119,7 @@ def connected_components(
     cluster_id = min image_id of the component.  Only nodes that appear in
     at least one edge are returned; callers union in singletons.
 
-    Small graphs take a BOUNDED driver fast path (same pattern as the
-    link planner's prune_max_keys key sample): when the raw pair list has
+    Small graphs take a BOUNDED driver fast path: when the raw pair list has
     at most `driver_max_edges` rows (~0.4 GB of Arrow-collected string
     pairs at the 2M default — a fraction of any real driver heap), the
     whole fixpoint collapses to ONE bounded scan of the committed pair

@@ -17,19 +17,13 @@ Ours, made concrete and cheaper:
     compute — no signature recompute, no band explode, no shuffle over
     the registry (the reference recomputes Zingg blocking over the full
     priors table every time);
-  * the registry-sided I/O is pruned too: priors_bands is hash-bucket
-    partitioned on pmod(band_key, cfg.band_buckets), written key-sorted
-    in ~band_file_rows-row files, each carrying a key range in the
-    manifest and a bloom in the snapshot's _blooms.json sidecar
-    (catalog.write_table bloom_col); run_link restricts the scan
-    DRIVER-SIDE to the increment's touched buckets, in-range files and
-    bloom-colliding files — the manifest-level pruning Iceberg does with
-    bucket partitioning + puffin/parquet blooms.  Band keys
-    are 64-bit hashes, so an append file only survives the bloom when it
-    holds a REAL band collision with the increment: per-increment bytes
-    read ≈ touched buckets of the initial snapshot + O(actual candidate
-    collisions) of the appended files, ~independent of how many
-    increments the registry has absorbed;
+  * the registry side is read whole: priors_bands is a plain table of
+    band_keys rows, and link_pairs inner-joins it against the increment's
+    distinct band keys, a tiny side AQE broadcasts, so only the touched
+    bands reach the shuffle.  No driver-side planner or custom scan sits
+    in front of the join: fixed cost dominates an increment, and reading
+    fewer registry bytes did not make the link faster (README, Incremental
+    workflow);
   * the bipartite band join only keeps cross-source pairs by construction,
     with the same hot-band sub-bucket salting as the initial pipeline;
   * the threshold rules are code, not prose: accept iff best score >=
@@ -40,7 +34,7 @@ Ours, made concrete and cheaper:
     reference's per-run uuid1 minting (02B:295-309);
   * the merge is APPEND-ONLY (catalog.append_table): signatures,
     cluster_members and verified_pairs gain new data files and prior files
-    are never rewritten, so an increment costs O(|incoming|) I/O no matter
+    are never rewritten, so a merge writes O(|incoming|) data no matter
     how large the registry is (the insert-only contract of 03:397).  Only
     the small `clusters` aggregate is recomputed.
   * exactly-once: every append manifest records the incoming_signatures
@@ -69,11 +63,8 @@ from customer_er_spark.config import ERConfig
 from customer_er_spark.operators.banded import salted_bands
 from customer_er_spark.operators.candidates import (
     band_keys,
-    band_sorted,
-    band_write_options,
     bands_per_record,
     candidate_pairs,
-    with_band_bucket,
 )
 from customer_er_spark.operators.components import connected_components
 from customer_er_spark.operators.materialize import materialize, owned, scratch_name
@@ -95,17 +86,15 @@ def link_pairs(
     `priors_bands` is the COMMITTED (band_key, image_id, phash) table the
     initial pipeline wrote and every merge appends to — priors are banded
     exactly once per record, ever.  Per increment, only the incoming side
-    is exploded (O(|incoming|) band rows); the registry side arrives here
-    ALREADY file-pruned (run_link passes the scan restricted to the
-    increment's touched hash buckets and bloom-colliding data files — see
-    _pruned_priors_bands), and is further reduced to exactly the touched
-    bands by an inner join against the increment's distinct band keys
-    BEFORE any shuffle.  The distinct-key side is tiny for a micro-batch,
-    so AQE plans the join as a broadcast hash join over the pruned scan:
-    the registry is never exploded or window-counted, and only the
-    touched-band prior rows ride the single band_key exchange below.
-    Dropping priors in untouched bands is lossless — a band with no
-    incoming member can produce no cross pair.
+    is exploded (O(|incoming|) band rows); the registry side is the whole
+    committed table, reduced to exactly the touched bands by an inner join
+    against the increment's distinct band keys BEFORE any shuffle.  The
+    distinct-key side is tiny for a micro-batch, so AQE plans the join as
+    a broadcast hash join over the plain scan: the registry is never
+    exploded or window-counted, and only the touched-band prior rows ride
+    the single band_key exchange below.  Dropping priors in untouched
+    bands is lossless — a band with no incoming member can produce no
+    cross pair.
 
     Skew policy mirrors candidate_pairs, applied to the SURVIVING rows:
     touched-band priors + incoming bands are unioned, bucket sizes counted
@@ -161,14 +150,7 @@ def link_pairs(
     return pairs, band_stats
 
 
-def _scan_state_key(run_key: str | None, inc_snapshot: str) -> str:
-    """State slot for one link run's registry-scan stats — keyed by the
-    batch identity (run_key, else the incoming snapshot) so interleaved or
-    resumed links never read another batch's scan record."""
-    return f"link_registry_scan::{run_key or inc_snapshot}"
-
-
-def _link_summary(catalog: SparkCatalog, resumed: bool, scan_key: str) -> dict:
+def _link_summary(catalog: SparkCatalog, resumed: bool) -> dict:
     return {
         "resumed": resumed,
         "candidates": catalog.table_meta("link_candidates")["counts"]["rows_out"],
@@ -178,241 +160,7 @@ def _link_summary(catalog: SparkCatalog, resumed: bool, scan_key: str) -> dict:
             for r in catalog.read_table("link_decisions")  # committed parquet,
             .groupBy("decision").count().collect()          # not the live plan
         },
-        # files/bytes of priors_bands THIS run's pruned link scan opened;
-        # carries a "mode" field: "pruned" (manifest file skipping fired),
-        # "legacy-full-scan" (pre-upgrade manifest without file entries),
-        # or "iceberg-delegated" (pruning happens inside Iceberg's own
-        # planner — bucket partitions + parquet stats — not driver-side)
-        "registry_scan": catalog.get_state(scan_key),
     }
-
-
-_BUCKET_RE = None
-
-
-def _bucket_from_path(path: str) -> int | None:
-    import re
-
-    global _BUCKET_RE
-    if _BUCKET_RE is None:
-        _BUCKET_RE = re.compile(r"band_bucket=(\d+)")
-    m = _BUCKET_RE.search(path)
-    return int(m.group(1)) if m else None
-
-
-def _incoming_band_keys(inc_sig: DataFrame, cfg: ERConfig):
-    """Driver-side sample of the increment's distinct band keys.
-
-    Returns (keys int64 array | None, buckets set[int]).  keys is None
-    when the increment touches more than cfg.prune_max_keys distinct
-    bands — then only bucket-level pruning applies (such an increment is
-    registry-scale anyway, so a registry-sized scan is proportionate)."""
-    import numpy as np
-
-    kdf = band_keys(inc_sig, cfg).select("band_key").distinct()
-    rows = kdf.limit(cfg.prune_max_keys + 1).collect()
-    if len(rows) > cfg.prune_max_keys:
-        buckets = {
-            r[0]
-            for r in kdf.select(
-                F.pmod(F.col("band_key"), F.lit(cfg.band_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        }
-        return None, buckets
-    keys = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-    # numpy % follows Python sign semantics (result sign = divisor) — the
-    # exact definition of Spark's pmod, so buckets match the writer's
-    buckets = set(int(b) for b in np.unique(keys % cfg.band_buckets))
-    return keys, buckets
-
-
-_PB_SCHEMA = "band_key bigint, image_id string, phash bigint"
-
-
-_PB_COLS = ["band_key", "image_id", "phash"]
-
-
-def _granule_scan(spark: SparkSession, plan: list, n_partitions: int) -> DataFrame:
-    """Planner-chosen row-group scan — the offline analog of Iceberg's
-    planFiles -> split assignment: the DRIVER decides exactly which row
-    groups of which data files a query needs (from manifest key ranges +
-    sidecar blooms), and executors read ONLY those granules via Arrow
-    (pyarrow read_row_groups), in parallel across the plan's splits.
-
-    Spark's native parquet reader cannot accept a row-group list (its
-    skipping is predicate-driven, and the predicates this scan would need
-    — a per-bucket disjunction over thousands of 64-bit keys — are either
-    unpushable or blow up plan size/codegen; measured: a 59-leaf filtered
-    union cost ~15 s to PLAN and ~18 s to run for 205 rows, vs ~1 s
-    here).  On a real Iceberg deployment this whole function is the
-    engine's own scan planning.
-
-    `plan` rows: (absolute_file_path, row_group_indices | None); None
-    means the whole file (no granule metadata recorded for it)."""
-    import pandas as pd  # noqa: F401  (mapInPandas contract)
-
-    rows = [
-        (f, None if rgs is None else [int(g) for g in rgs]) for f, rgs in plan
-    ]
-    pdf = spark.createDataFrame(rows, "file string, rgs array<int>")
-    pdf = pdf.repartition(max(1, min(n_partitions, len(rows))))
-
-    def read(batches):
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            for f, rgs in zip(b["file"], b["rgs"]):
-                pf = pq.ParquetFile(f)
-                t = (
-                    pf.read(columns=_PB_COLS)
-                    if rgs is None
-                    else pf.read_row_groups(list(rgs), columns=_PB_COLS)
-                )
-                yield t.to_pandas()
-
-    return pdf.mapInPandas(read, schema=_PB_SCHEMA)
-
-
-def _pruned_priors_bands(
-    spark: SparkSession,
-    catalog: SparkCatalog,
-    cfg: ERConfig,
-    buckets: set[int],
-    keys,
-) -> tuple[DataFrame, dict | None]:
-    """The registry band scan for one increment, pruned DRIVER-SIDE from
-    the manifest at ROW-GROUP granularity (the planner-level skipping
-    Iceberg performs with bucket partitions + parquet stats/blooms):
-
-      partition prune  a file under band_bucket=B is skipped unless the
-                       increment emits a band key with pmod(key, K) = B —
-                       lossless, the link join is an inner join on exact
-                       band_key;
-      range prune      probe keys outside a granule's recorded
-                       [kmin, kmax] are dropped before its bloom is
-                       consulted (data is written key-sorted, so row-group
-                       ranges are narrow);
-      bloom prune      a row group whose sidecar bloom provably contains
-                       none of the increment's band keys is skipped —
-                       lossless up to bloom false POSITIVES, which only
-                       ever keep extra granules.
-
-    The surviving (file, row-group) list is then read by _granule_scan,
-    so the I/O performed is exactly the bytes reported here.  Each
-    granule's bloom is probed with ONLY the increment keys of its file's
-    bucket that fall inside its key range — an any-of-k probe compounds
-    the bloom's per-key FP ~k-fold, so shrinking k is what makes skipping
-    actually fire.
-
-    Returns (df, stats); stats always carries a "mode" field:
-    "pruned" when manifest skipping fired, "legacy-full-scan" when the
-    parquet manifest predates pruning (no file entries), and
-    "iceberg-delegated" when the backend is Iceberg without per-file
-    manifest entries — there the same layout (bucket partitions + parquet
-    blooms/stats) is pruned by Iceberg's own planner, not driver-side."""
-    files_fn = getattr(catalog, "table_files", None)
-    entries = (files_fn("priors_bands") if files_fn is not None else None) or []
-    if not entries or any("file" not in e for e in entries):
-        mode = (
-            "iceberg-delegated"
-            if getattr(catalog, "backend", "parquet") == "iceberg"
-            else "legacy-full-scan"
-        )
-        return catalog.read_table("priors_bands"), {"mode": mode}
-    import numpy as np
-
-    from customer_er_spark.functions import bloom as bloom_mod
-
-    by_bucket: dict | None = None
-    h_all = None
-    all_idx = None
-    if keys is not None and len(keys):
-        h_all = bloom_mod.hash_keys(keys)
-        all_idx = np.arange(len(keys))
-        kb = keys % cfg.band_buckets
-        by_bucket = {
-            int(b): np.nonzero(kb == b)[0] for b in np.unique(kb)
-        }
-
-    def _granules(e: dict) -> list[dict]:
-        # row-group entries when recorded; else the file is one granule
-        return e.get("row_groups") or [
-            {
-                "rows": e.get("rows", 0),
-                "bytes": e.get("bytes", 0),
-                "kmin": e.get("kmin"),
-                "kmax": e.get("kmax"),
-                "_file_level": True,
-            }
-        ]
-
-    plan: list = []  # (abs file, surviving rg indices | None=whole file)
-    files_read = rgs_total = rgs_read = 0
-    bytes_total = bytes_read = 0
-    for e in entries:
-        gs = _granules(e)
-        rgs_total += len(gs)
-        bytes_total += sum(g["bytes"] for g in gs)
-        b = _bucket_from_path(e["file"])
-        if b is not None and b not in buckets:
-            continue
-        if h_all is None:
-            # no driver-side key list (registry-scale increment):
-            # bucket-level pruning only, chosen files read whole
-            plan.append((catalog.resolve_file(e), None))
-            files_read += 1
-            rgs_read += len(gs)
-            bytes_read += sum(g["bytes"] for g in gs)
-            continue
-        if b is not None and by_bucket is not None:
-            idx0 = by_bucket.get(b)
-            if idx0 is None or not len(idx0):
-                continue  # no increment key maps to this bucket
-        else:  # un-bucketed file: probe with every key
-            idx0 = all_idx
-        survived: list[int] = []
-        whole = False
-        for g, gr in enumerate(gs):
-            idx = idx0
-            if gr.get("kmin") is not None:
-                sub = keys[idx]
-                idx = idx[(sub >= gr["kmin"]) & (sub <= gr["kmax"])]
-                if not len(idx):
-                    continue
-            bl = catalog.file_bloom(
-                e, rg=None if gr.get("_file_level") else g
-            )
-            if bl is not None and not bloom_mod.might_contain_any(
-                bl, h_all[0][idx], h_all[1][idx]
-            ):
-                continue
-            survived.append(g)
-            bytes_read += gr["bytes"]
-            if gr.get("_file_level"):
-                whole = True  # single-granule entry = the whole file
-        if survived:
-            plan.append(
-                (catalog.resolve_file(e), None if whole else survived)
-            )
-            files_read += 1
-            rgs_read += len(survived)
-    stats = {
-        "mode": "pruned",
-        "files_total": len(entries),
-        "files_read": files_read,
-        "rgs_total": rgs_total,
-        "rgs_read": rgs_read,
-        "bytes_total": bytes_total,
-        "bytes_read": bytes_read,
-        "bloom_pruning": h_all is not None,
-    }
-    if not plan:
-        return spark.createDataFrame([], _PB_SCHEMA), stats
-    return _granule_scan(spark, plan, cfg.shuffle_partitions), stats
 
 
 def run_link(
@@ -450,10 +198,7 @@ def run_link(
             and dec.get("inputs", {}).get("incoming_signatures")
             == meta.get("snapshot_id")
         ):
-            return _link_summary(
-                catalog, resumed=True,
-                scan_key=_scan_state_key(run_key, meta.get("snapshot_id") or ""),
-            )
+            return _link_summary(catalog, resumed=True)
 
     priors_sig = catalog.read_table("signatures")
     # the committed registry band table (written by run_initial, appended
@@ -482,17 +227,11 @@ def run_link(
         )
     ):
         catalog.write_table(
-            band_sorted(with_band_bucket(band_keys(priors_sig, cfg), cfg), cfg),
+            band_keys(priors_sig, cfg),
             "priors_bands",
             config_hash=ch,
             inputs={"signatures": catalog.snapshot_id("signatures") or ""},
             overwrite_schema=True,
-            partition_by=["band_bucket"],
-            bloom_col="band_key",
-            bloom_max_rows=cfg.bloom_max_keys,
-            write_options=band_write_options(
-                cfg, (sig_meta or {}).get("counts", {}).get("rows_out", 0)
-            ),
         )
 
     inc_sig = compute_signatures(incoming, cfg)
@@ -507,16 +246,6 @@ def run_link(
         "priors_bands": catalog.snapshot_id("priors_bands") or "",
     }
 
-    # prune the registry band scan to what this increment can possibly
-    # touch (file skipping from the manifest, before Spark ever lists a
-    # file); the stats make the per-increment registry I/O auditable
-    inc_keys_arr, touched_buckets = _incoming_band_keys(inc_sig, cfg)
-    priors_bands, scan_stats = _pruned_priors_bands(
-        spark, catalog, cfg, touched_buckets, inc_keys_arr
-    )
-    scan_key = _scan_state_key(run_key, link_inputs["incoming_signatures"])
-    catalog.set_state(scan_key, scan_stats)
-
     # checkpoint candidates through the catalog: the bipartite band join
     # executes exactly once (the write action); verify reads the committed
     # parquet and the summary count comes free from the manifest.
@@ -526,7 +255,9 @@ def run_link(
     # roll forward over a catalog written by the previous version instead
     # of failing the schema contract (r6 advice).
     with owned():  # the salted band rows' barrier ends with these commits
-        raw_pairs, link_band_stats = link_pairs(priors_bands, inc_sig, cfg)
+        raw_pairs, link_band_stats = link_pairs(
+            catalog.read_table("priors_bands"), inc_sig, cfg
+        )
         catalog.write_table(
             link_band_stats, "link_band_stats", config_hash=ch,
             inputs=link_inputs, overwrite_schema=True,
@@ -671,7 +402,7 @@ def run_link(
         link_review, "link_review", config_hash=ch, inputs=link_inputs,
         overwrite_schema=True,
     )
-    return _link_summary(catalog, resumed=False, scan_key=scan_key)
+    return _link_summary(catalog, resumed=False)
 
 
 def run_incremental_match(
@@ -715,12 +446,12 @@ def run_incremental_match(
         if saved is not None:
             return {**saved, "resumed": True}
 
-    def append_once(build_df, table: str, **write_kwargs) -> dict:
+    def append_once(build_df, table: str) -> dict:
         meta = catalog.table_meta(table)
         if meta is not None and meta.get("inputs") == lineage:
             return meta  # this increment is already applied to this table
         return catalog.append_table(
-            build_df(), table, config_hash=ch, inputs=lineage, **write_kwargs
+            build_df(), table, config_hash=ch, inputs=lineage
         )
 
     decisions = catalog.read_table("link_decisions")
@@ -826,21 +557,7 @@ def run_incremental_match(
     # keep the registry band table current: the NEXT increment's link join
     # must see this increment's records as priors (banded here, once —
     # O(|incoming|) band rows; never re-derived from the registry again).
-    # Appends keep the committed layout: bucket partition dirs (aligned
-    # with the initial write so partition pruning spans every commit) and
-    # per-file band_key blooms — the knob that makes LATER increments skip
-    # this increment's files unless they actually band-collide with it.
-    append_once(
-        lambda: band_sorted(with_band_bucket(band_keys(inc_sig, cfg), cfg), cfg),
-        "priors_bands",
-        partition_by=["band_bucket"],
-        bloom_col="band_key",
-        bloom_max_rows=cfg.bloom_max_keys,
-        write_options=band_write_options(
-            cfg,
-            catalog.table_meta("incoming_signatures")["counts"]["rows_out"],
-        ),
-    )
+    append_once(lambda: band_keys(inc_sig, cfg), "priors_bands")
 
     # clusters is a small aggregate over members — recomputed, not appended
     members_now = catalog.read_table("cluster_members")

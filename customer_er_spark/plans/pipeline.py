@@ -32,10 +32,7 @@ from customer_er_spark.catalog import SparkCatalog
 from customer_er_spark.config import ERConfig
 from customer_er_spark.operators.candidates import (
     band_keys,
-    band_sorted,
-    band_write_options,
     candidate_pairs_from_bands,
-    with_band_bucket,
 )
 from customer_er_spark.operators.components import connected_components
 from customer_er_spark.operators.materialize import owned
@@ -61,14 +58,15 @@ def run_initial(
     summary: dict[str, dict] = {}
 
     def stage(name: str, inputs: dict[str, str], build, rows_in: int,
-              **write_kwargs):
+              overwrite_schema: bool = False):
         t0 = time.time()
         if catalog.has_snapshot(name, ch, inputs):
             summary[name] = {"resumed": True, **catalog.table_meta(name)["counts"]}
             return catalog.read_table(name)
         with owned():  # the stage's shared barriers end with its commit
             manifest = catalog.write_table(build(), name, config_hash=ch,
-                                           inputs=inputs, **write_kwargs)
+                                           inputs=inputs,
+                                           overwrite_schema=overwrite_schema)
         out = catalog.read_table(name)
         rows_out = manifest["counts"]["rows_out"]
         metrics.record(
@@ -92,35 +90,19 @@ def run_initial(
     # (plans/incremental.py link_pairs) join their band keys against this
     # table instead of re-banding the whole registry on every run, and
     # each merge appends the incoming band rows — the registry is banded
-    # exactly once per record, ever.  Physical layout is built for the
-    # increment reader: hash-bucket partition dirs on
-    # pmod(band_key, band_buckets) (repartitioned on the bucket first so
-    # each bucket lands in ~one file instead of one per task) plus
-    # per-file band_key blooms for small files, so run_link can prune the
-    # registry scan to touched buckets / colliding files driver-side.
-    bands = stage(
-        "priors_bands", sig_snap,
-        lambda: band_sorted(with_band_bucket(band_keys(sig, cfg), cfg), cfg),
-        n_images,
-        partition_by=["band_bucket"],
-        bloom_col="band_key",
-        bloom_max_rows=cfg.bloom_max_keys,
-        write_options=band_write_options(cfg, n_images),
-    )
+    # exactly once per record, ever.  It is a plain table (band_keys
+    # output as is): the link reads it whole and its inner join against
+    # the increment's distinct band keys keeps only the touched bands.
+    bands = stage("priors_bands", sig_snap,
+                  lambda: band_keys(sig, cfg), n_images,
+                  overwrite_schema=True)
     bands_snap = {
         **sig_snap,
         "priors_bands": catalog.snapshot_id("priors_bands") or "",
     }
 
     def build_pairs():
-        # band_bucket is physical-layout state for the increment reader —
-        # project it out so it never rides the candidate-join exchange.
-        # (Measured: the granular row-group layout reads back as fast as
-        # a fat-row-group one — 0.69s vs 0.66s arrow / 1.38s re-derive at
-        # the 6k bench — so the committed table stays the single source.)
-        pairs, band_stats = candidate_pairs_from_bands(
-            bands.select("band_key", "image_id", "phash"), cfg
-        )
+        pairs, band_stats = candidate_pairs_from_bands(bands, cfg)
         catalog.write_table(band_stats, "band_stats", config_hash=ch,
                             inputs=bands_snap, overwrite_schema=True)
         return pairs

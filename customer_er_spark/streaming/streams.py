@@ -182,19 +182,16 @@ def process_registry_batch(
         import time
 
         t0 = time.time()
-        link = run_link(spark, batch_df, catalog, cfg,
-                        run_key=f"batch-{batch_id}")
+        run_link(spark, batch_df, catalog, cfg, run_key=f"batch-{batch_id}")
         run_incremental_match(spark, batch_df, catalog, cfg)
-        # per-batch ingest metrics (wall + pruned registry-scan footprint):
-        # the audit trail that streaming increments stay registry-size-
-        # independent; read back by tools/bench_stream.py
+        # per-batch ingest metrics: the audit trail of what each
+        # micro-batch cost
         inc_meta = catalog.table_meta("incoming_signatures") or {}
         catalog.set_state(
             f"batch_metrics::{batch_id}",
             {
                 "wall_sec": round(time.time() - t0, 3),
                 "incoming_rows": inc_meta.get("counts", {}).get("rows_out"),
-                "registry_scan": link.get("registry_scan"),
             },
         )
     catalog.set_state(FENCE, batch_id)

@@ -184,6 +184,16 @@ def test_commit_counts_from_footers_no_extra_job(spark, catalog):
     )
     assert meta2["counts"]["rows_out"] == 1234
     assert meta2["n_files"] >= 3
+    # a 0-row partitioned write leaves no parquet file: the read takes its
+    # schema from the manifest instead of inferring it from files
+    meta3 = catalog.write_table(
+        df.withColumn("p", F.col("id") % 3).limit(0), "footer_counts_empty",
+        partition_by=["p"],
+    )
+    assert meta3["counts"]["rows_out"] == 0
+    empty = catalog.read_table("footer_counts_empty")
+    assert empty.count() == 0
+    assert sorted(empty.columns) == ["id", "p", "v"]
 
 
 def _truth_scores(catalog):

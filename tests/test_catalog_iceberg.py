@@ -20,7 +20,7 @@ CONTRACT = [
     "write_table", "append_table", "read_table", "table_meta",
     "snapshot_id", "has_snapshot", "get_state", "set_state",
     "drop_table", "list_tables", "create_database", "drop_database",
-    "database", "ddl", "table_files", "resolve_file", "file_bloom",
+    "database", "ddl",
 ]
 
 
@@ -42,88 +42,6 @@ def test_unavailable_raises_clearly(spark):
         pytest.skip("Iceberg IS available here; covered by the roundtrip test")
     with pytest.raises(RuntimeError, match="spark.sql.catalog"):
         IcebergCatalog(spark)
-
-
-def test_pruned_scan_from_iceberg_files_shape(spark, tmp_path):
-    """r6 verdict #5: the incremental link's driver-side scan pruning must
-    fire from `.files`-shaped entries (file path + rows + bytes ONLY — no
-    manifest blooms/key ranges, those stay native to Iceberg's parquet).
-    Offline stand-in: a facade over a real parquet catalog serves exactly
-    that shape with backend='iceberg'; bucket-partition pruning must fire
-    (mode='pruned'), the pruned scan must be lossless for the probe keys,
-    and a backend without `.files` must report mode='iceberg-delegated'
-    with the full scan."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from customer_er_spark.config import ERConfig
-    from customer_er_spark.operators.candidates import (
-        band_sorted,
-        with_band_bucket,
-    )
-    from customer_er_spark.plans import incremental as inc
-
-    cfg = ERConfig(shuffle_partitions=4, band_buckets=8)
-    cat = SparkCatalog(spark, str(tmp_path / "ice_parity"))
-    bands = spark.createDataFrame(
-        [(k, f"im{k}", 0) for k in range(1, 401)],
-        "band_key long, image_id string, phash long",
-    )
-    cat.write_table(
-        band_sorted(with_band_bucket(bands, cfg), cfg), "priors_bands",
-        partition_by=["band_bucket"], bloom_col="band_key",
-        write_options={"maxRecordsPerFile": "25"},
-    )
-
-    class IcebergFacade:
-        backend = "iceberg"
-
-        def __init__(self, inner, serve_files=True):
-            self._inner, self._serve = inner, serve_files
-
-        def table_files(self, name):
-            if not self._serve:
-                return None  # .files metadata table unavailable
-            return [
-                {
-                    "path": e["path"],
-                    "file": self._inner.resolve_file(e),
-                    "rows": e["rows"],
-                    "bytes": e["bytes"],
-                }
-                for e in self._inner.table_files(name)
-            ]
-
-        def table_meta(self, name):
-            return self._inner.table_meta(name)
-
-        def read_table(self, name):
-            return self._inner.read_table(name)
-
-        def resolve_file(self, e):
-            return e["file"]
-
-        def file_bloom(self, e, rg=None):
-            return None
-
-    keys = np.array([3, 7, 123], dtype=np.int64)
-    buckets = {int(b) for b in np.unique(keys % cfg.band_buckets)}
-    df, stats = inc._pruned_priors_bands(
-        spark, IcebergFacade(cat), cfg, buckets, keys
-    )
-    assert stats["mode"] == "pruned", stats
-    assert 0 < stats["files_read"] < stats["files_total"], stats
-    got = {
-        r["band_key"]
-        for r in df.where(F.col("band_key").isin([3, 7, 123])).collect()
-    }
-    assert got == {3, 7, 123}  # lossless for every probe key
-
-    df2, stats2 = inc._pruned_priors_bands(
-        spark, IcebergFacade(cat, serve_files=False), cfg, buckets, keys
-    )
-    assert stats2 == {"mode": "iceberg-delegated"}, stats2
-    assert df2.count() == 400  # delegated = full table, Iceberg prunes inside
 
 
 def test_iceberg_roundtrip(spark, tmp_path):

@@ -98,77 +98,3 @@ def test_simhash_near_far():
 def test_mix_keys_unique():
     k = mix_keys(128, 0x5EED)
     assert len(np.unique(k)) == 128
-
-
-def test_bloom_membership_and_fp_rate():
-    """Manifest blooms (functions/bloom.py): zero false negatives by
-    construction; per-key FP well under 1e-3 at the 20-bit default (the
-    any-of-k probe in the link reader compounds FP ~k-fold, so the
-    per-key rate is the load-bearing number)."""
-    from customer_er_spark.functions import bloom
-
-    rng = np.random.default_rng(123)
-    keys = rng.integers(-2**63, 2**63 - 1, 5000, dtype=np.int64)
-    b = bloom.build(keys)
-    # every inserted key is found (probe one at a time: no-FN is per key)
-    h1, h2 = bloom.hash_keys(keys)
-    for i in range(0, 5000, 97):
-        assert bloom.might_contain_any(b, h1[i:i + 1], h2[i:i + 1])
-    # any-of probe over the full set
-    assert bloom.might_contain_any(b, h1, h2)
-    # fresh keys: per-key FP rate under 1e-3
-    other = rng.integers(-2**63, 2**63 - 1, 4000, dtype=np.int64)
-    o1, o2 = bloom.hash_keys(other)
-    fp = sum(
-        bloom.might_contain_any(b, o1[i:i + 1], o2[i:i + 1])
-        for i in range(4000)
-    )
-    assert fp / 4000 < 1e-3, fp
-    # an all-miss batch probe returns False (the file-skip verdict)
-    assert not bloom.might_contain_any(b, o1[:50], o2[:50]) or fp > 0
-
-
-def test_bloom_empty_and_json_roundtrip():
-    import json
-
-    from customer_er_spark.functions import bloom
-
-    b = bloom.build(np.array([], dtype=np.int64))
-    h1, h2 = bloom.hash_keys(np.array([42], dtype=np.int64))
-    assert not bloom.might_contain_any(b, h1, h2)
-    # manifest round-trip: bloom dicts are plain JSON
-    b2 = json.loads(json.dumps(bloom.build(np.array([7, -9], dtype=np.int64))))
-    k1, k2 = bloom.hash_keys(np.array([7], dtype=np.int64))
-    assert bloom.might_contain_any(b2, k1, k2)
-
-
-def test_bloom_build_sliced_equals_per_slice_build():
-    """build_sliced is the vectorized commit-walk twin of build(): same
-    probe semantics per slice, and bit-identical to build() whenever the
-    slice's own power-of-two table size equals the shared one."""
-    import numpy as np
-
-    from customer_er_spark.functions import bloom
-
-    rng = np.random.default_rng(11)
-    keys = rng.integers(-(2**62), 2**62, 1000, dtype=np.int64)
-    slice_rows = [64] * 14 + [37, 67]
-    assert sum(slice_rows) == 1000
-    sliced = bloom.build_sliced(keys, slice_rows)
-    assert len(sliced) == len(slice_rows)
-    off = 0
-    for j, rows in enumerate(slice_rows):
-        single = bloom.build(keys[off : off + rows])
-        if single["m"] == sliced[j]["m"]:  # full-size slices: bit-identical
-            assert single == sliced[j]
-        # probe semantics hold either way: every member key is contained,
-        # and a disjoint random probe set is (almost surely) rejected
-        h_in = bloom.hash_keys(keys[off : off + rows])
-        assert bloom.might_contain_any(sliced[j], h_in[0][:1], h_in[1][:1])
-        h_out = bloom.hash_keys(
-            rng.integers(-(2**62), 2**62, 3, dtype=np.int64)
-        )
-        # 3 random keys vs a ~1e-4/key bloom: FP chance ~3e-4; seed is fixed
-        assert not bloom.might_contain_any(sliced[j], h_out[0], h_out[1])
-        off += rows
-    assert bloom.build_sliced(keys, []) == []

@@ -148,126 +148,83 @@ def test_second_increment_does_not_reband_priors(
     assert m["precision"] >= 0.95, m
 
 
-def test_pruned_registry_scan(spark, small_corpus, tmp_path):
-    """Manifest-level file pruning of the link's registry scan (r5 verdict
-    #1): the committed priors_bands is bucket-partitioned with per-file
-    band_key blooms, and a micro-increment reads only the files it can
-    band-collide with — while a true-duplicate increment still finds and
-    accepts every link (pruning is lossless)."""
+def test_link_candidates_equal_full_band_join(
+    spark, small_corpus, incremental_run, tmp_path
+):
+    """run_link reads the whole registry band table: its candidates are
+    exactly the cross-side band join of the priors' and the increment's
+    band rows under the Hamming gate, and a true-duplicate increment
+    accepts every duplicate, also from a moved catalog."""
+    import shutil
+
+    import pandas as pd
+
     from customer_er_spark.catalog import SparkCatalog
-    from customer_er_spark.datagen import write_corpus
+    from customer_er_spark.operators.candidates import band_keys
 
-    catalog = SparkCatalog(spark, str(tmp_path / "prune_cat"))
-    initial = spark.read.parquet(f"{small_corpus['dir']}/images_initial.parquet")
-    incoming = spark.read.parquet(
-        f"{small_corpus['dir']}/images_incremental.parquet"
+    catalog, _, _ = incremental_run
+    # after run_initial and one merge the band table is plain: no bucket
+    # directories, no bloom sidecars
+    pb_files = [
+        os.path.join(root, f)
+        for root, _dirs, fs in os.walk(os.path.join(catalog.base_dir,
+                                                    "priors_bands"))
+        for f in fs
+    ]
+    pb_meta = catalog.table_meta("priors_bands")
+    assert len(pb_meta["paths"]) == 2
+    assert not any("band_bucket=" in p or p.endswith("_blooms.json")
+                   for p in pb_files)
+    assert all(not os.path.isabs(e["file"]) for e in pb_meta["data_files"])
+
+    # leg 1: the link of images_incremental into the initial registry.
+    # No band was salted, so the link's candidates must equal the plain
+    # pandas band join exactly.
+    assert catalog.read_table("link_band_stats").where("degraded").count() == 0
+    inc_sig = catalog.read_table("incoming_signatures")
+    inc_ids = inc_sig.select("image_id")
+    prior_sig = catalog.read_table("signatures").join(
+        inc_ids, "image_id", "left_anti"
     )
-    run_initial(spark, initial, catalog, CFG)
-
-    # layout contract: bucket partition dirs (one file per bucket), per-
-    # ROW-GROUP key ranges in the manifest (data is key-sorted so ranges
-    # are narrow and disjoint-ish), blooms in the snapshot's sidecar
-    # (r6 advice: manifests stay small; blooms live next to the data)
-    pb = catalog.table_meta("priors_bands")
-    assert all("file" in e and "bytes" in e for e in pb["data_files"])
-    assert all("band_bucket=" in e["file"] for e in pb["data_files"])
-    assert any(e.get("bloom_sidecar") for e in pb["data_files"])
-    assert any("kmin" in e and "kmax" in e for e in pb["data_files"])
-    assert all(not os.path.isabs(e["file"]) for e in pb["data_files"])
-    ex = next(e for e in pb["data_files"] if e.get("bloom_sidecar"))
-    assert len(ex["row_groups"]) > 1  # granules, not one blob per bucket
-    assert all(
-        g["kmin"] <= g["kmax"] and g["rows"] > 0 and g["bytes"] > 0
-        for g in ex["row_groups"]
-    )
-    assert catalog.file_bloom(ex, rg=0) is not None
-
-    # grow the registry by one merge so append files exist too
-    run_link(spark, incoming, catalog, CFG, run_key="grow")
-    run_incremental_match(spark, incoming, catalog, CFG)
-
-    # leg 1: a DISJOINT micro-increment (fresh generator universe) —
-    # almost nothing in the registry shares a band with it, so the scan
-    # must skip most files (survivors = rare true chunk collisions +
-    # bloom false positives)
-    write_corpus(str(tmp_path / "fresh"), n_base=5, dup_fraction=0.0,
-                 seed=31337)
-    micro = spark.read.parquet(
-        str(tmp_path / "fresh" / "images.parquet")
-    ).withColumn("image_id", F.concat(F.lit("new_"), F.col("image_id")))
-    s = run_link(spark, micro, catalog, CFG, run_key="micro")
-    scan = s["registry_scan"]
-    assert scan is not None and scan["bloom_pruning"] is True
-    assert scan["mode"] == "pruned", scan
-    assert scan["files_read"] < scan["files_total"] // 4, scan
-    assert scan["bytes_read"] < scan["bytes_total"], scan
+    pb = band_keys(prior_sig, CFG).toPandas()
+    ib = band_keys(inc_sig, CFG).toPandas()
+    j = pb.merge(ib, on="band_key", suffixes=("_l", "_r"))
+    x = (j["phash_l"].to_numpy() ^ j["phash_r"].to_numpy()).view("uint64")
+    hd = [bin(int(v)).count("1") for v in x]
+    j = j[pd.Series(hd, index=j.index) <= CFG.phash_hamming_max]
+    expect = set(zip(j["image_id_l"], j["image_id_r"]))
+    got = {
+        (r["id_l"], r["id_r"])
+        for r in catalog.read_table("link_candidates").collect()
+    }
+    assert expect, "the increment must band-collide with the registry"
+    assert got == expect
 
     # leg 2: true duplicates of registry records — identical phash, so
-    # every one must still link and accept despite the pruned scan
+    # every one must link and accept.  Run on a copy: the shared catalog
+    # keeps its link tables for the tests below.
+    initial = spark.read.parquet(f"{small_corpus['dir']}/images_initial.parquet")
     dups = initial.limit(3).withColumn(
         "image_id", F.concat(F.lit("dup_"), F.col("image_id"))
     )
-    s2 = run_link(spark, dups, catalog, CFG, run_key="dups")
+    copy_dir = str(tmp_path / "link_cat")
+    shutil.copytree(catalog.base_dir, copy_dir)
+    s2 = run_link(spark, dups, SparkCatalog(spark, copy_dir), CFG,
+                  run_key="dups")
     assert s2["decisions"].get("accept", 0) == 3, s2
-    assert s2["registry_scan"]["files_read"] >= 1
 
-    # leg 3: a MOVED catalog (r6 advice: manifests record paths relative
-    # to the base dir) — reads AND the pruned scan keep working from the
-    # new location
-    import shutil
-
-    from customer_er_spark.catalog import SparkCatalog as SC
-
-    moved_dir = str(tmp_path / "prune_cat_moved")
-    shutil.copytree(str(tmp_path / "prune_cat"), moved_dir)
-    shutil.rmtree(str(tmp_path / "prune_cat"))
-    moved = SC(spark, moved_dir)
+    # leg 3: a MOVED catalog (manifests record paths relative to the base
+    # dir) — reads and the link keep working from the new location
+    moved_dir = str(tmp_path / "link_cat_moved")
+    shutil.copytree(copy_dir, moved_dir)
+    shutil.rmtree(copy_dir)
+    moved = SparkCatalog(spark, moved_dir)
     assert moved.read_table("cluster_members").count() > 0
-    micro2 = micro.withColumn(
+    dups2 = dups.withColumn(
         "image_id", F.concat(F.lit("m2_"), F.col("image_id"))
     )
-    s3 = run_link(spark, micro2, moved, CFG, run_key="moved")
-    scan3 = s3["registry_scan"]
-    assert scan3["mode"] == "pruned", scan3
-    assert scan3["files_read"] < scan3["files_total"] // 4, scan3
-
-
-def test_scan_mode_and_keyed_state(spark, small_corpus, tmp_path):
-    """r6 advice/verdict #4: the registry-scan record (a) carries an
-    explicit mode instead of conflating legacy manifests with delegated
-    backends, and (b) is keyed by the link run, so a resumed run reports
-    ITS OWN scan, not whichever link executed last."""
-    import json
-
-    from customer_er_spark.catalog import SparkCatalog
-
-    catalog = SparkCatalog(spark, str(tmp_path / "mode_cat"))
-    initial = spark.read.parquet(f"{small_corpus['dir']}/images_initial.parquet")
-    incoming = spark.read.parquet(
-        f"{small_corpus['dir']}/images_incremental.parquet"
-    )
-    run_initial(spark, initial, catalog, CFG)
-
-    s = run_link(spark, incoming, catalog, CFG, run_key="a")
-    assert s["registry_scan"]["mode"] == "pruned"
-
-    # resumed replay must read run "a"'s slot even after another slot
-    # was written later (the old unkeyed slot would have been clobbered)
-    catalog.set_state("link_registry_scan::other", {"mode": "junk"})
-    s2 = run_link(spark, incoming, catalog, CFG, run_key="a")
-    assert s2["resumed"] is True
-    assert s2["registry_scan"] == s["registry_scan"]
-
-    # legacy manifest (pre-upgrade, no per-file entries) -> explicit
-    # legacy-full-scan mode, full scan still correct
-    mp = catalog._manifest_path("priors_bands")
-    with open(mp) as f:
-        meta = json.load(f)
-    meta.pop("data_files", None)
-    with open(mp, "w") as f:
-        json.dump(meta, f)
-    s3 = run_link(spark, incoming, catalog, CFG, run_key="b")
-    assert s3["registry_scan"] == {"mode": "legacy-full-scan"}, s3
+    s3 = run_link(spark, dups2, moved, CFG, run_key="moved")
+    assert s3["decisions"].get("accept", 0) == 3, s3
 
 
 def test_link_schema_rollforward(spark, small_corpus, tmp_path):
@@ -328,8 +285,52 @@ def test_link_rebands_on_lineage_divergence(spark, small_corpus, tmp_path):
     # FULL current signatures table
     pb = catalog.table_meta("priors_bands")
     assert pb["counts"]["rows_out"] == bands_per_record(CFG) * n_sig
-    # healed layout keeps the pruning contract (buckets + blooms)
-    assert all("band_bucket=" in e["file"] for e in pb["data_files"])
+
+
+@pytest.fixture(scope="module")
+def empty_registry_counts(spark, small_corpus, tmp_path_factory):
+    """Rows seen along empty initial -> 20-image link -> its merge."""
+    from customer_er_spark.catalog import SparkCatalog
+
+    catalog = SparkCatalog(spark, str(tmp_path_factory.mktemp("empty_reg")))
+    images = spark.read.parquet(f"{small_corpus['dir']}/images.parquet")
+    batch = images.orderBy("image_id").limit(20)
+    counts = {}
+    run_initial(spark, images.limit(0), catalog, CFG)
+    counts["initial_empty"] = catalog.read_table("cluster_members").count()
+    run_link(spark, batch, catalog, CFG, run_key="e1")
+    counts["link_into_empty"] = catalog.read_table("link_candidates").count()
+    run_incremental_match(spark, batch, catalog, CFG)
+    counts["merge_into_empty"] = catalog.read_table("cluster_members").count()
+    return counts
+
+
+@pytest.fixture(scope="module")
+def empty_batch_counts(spark, small_corpus, tmp_path_factory):
+    """Rows after an empty batch is linked and merged into 50 images."""
+    from customer_er_spark.catalog import SparkCatalog
+
+    catalog = SparkCatalog(spark, str(tmp_path_factory.mktemp("empty_batch")))
+    images = spark.read.parquet(f"{small_corpus['dir']}/images.parquet")
+    run_initial(spark, images.orderBy("image_id").limit(50), catalog, CFG)
+    run_link(spark, images.limit(0), catalog, CFG, run_key="e0")
+    run_incremental_match(spark, images.limit(0), catalog, CFG)
+    return {
+        "empty_batch_into_50": catalog.read_table("cluster_members").count()
+    }
+
+
+@pytest.mark.parametrize("fixture,case,expected", [
+    ("empty_registry_counts", "initial_empty", 0),
+    ("empty_registry_counts", "link_into_empty", 0),
+    ("empty_registry_counts", "merge_into_empty", 20),
+    ("empty_batch_counts", "empty_batch_into_50", 50),
+])
+def test_empty_input(request, fixture, case, expected):
+    """Every plan runs on empty input: an empty registry, a batch linked
+    into it, and an empty batch merged into a registry.  Each record of
+    the input is one cluster member, so the counts are known up front."""
+    assert request.getfixturevalue(fixture)[case] == expected
 
 
 def test_link_review_artifact(spark, small_corpus, incremental_run):

@@ -114,38 +114,18 @@ def main() -> None:
     from customer_er_spark.operators.candidates import band_keys
     from customer_er_spark.plans.incremental import link_pairs
 
-    from customer_er_spark.operators.candidates import with_band_bucket
-    from customer_er_spark.plans.incremental import (
-        _incoming_band_keys,
-        _pruned_priors_bands,
-    )
-
     cat = SparkCatalog(spark, tempfile.mkdtemp(prefix="plans_cat_"))
     psig = compute_signatures(images.limit(2000), cfg)
-    cat.write_table(
-        with_band_bucket(band_keys(psig, cfg), cfg).repartition(
-            cfg.shuffle_partitions, "band_bucket"
-        ),
-        "priors_bands", config_hash=cfg.config_hash(),
-        partition_by=["band_bucket"], bloom_col="band_key",
-        bloom_max_rows=cfg.bloom_max_keys,
-    )
+    cat.write_table(band_keys(psig, cfg), "priors_bands",
+                    config_hash=cfg.config_hash())
     inc_sig = compute_signatures(images.limit(100), cfg)
-    keys, buckets = _incoming_band_keys(inc_sig, cfg)
-    pruned, scan_stats = _pruned_priors_bands(spark, cat, cfg, buckets, keys)
-    lp, _ = link_pairs(pruned, inc_sig, cfg)
-    dump("incremental link_pairs (priors_bands scan PRE-PRUNED from the "
-         "manifest — bucket partitions + per-file band_key blooms decide "
-         "file skipping driver-side, the Iceberg-manifest equivalent of "
-         f"PartitionFilters; this dump read {scan_stats['files_read']} of "
-         f"{scan_stats['files_total']} files, "
-         f"{scan_stats['bytes_read']}/{scan_stats['bytes_total']} bytes "
-         "-> bare 3-column scan of surviving files -> BroadcastHashJoin "
-         "against the increment's distinct band keys -> union with "
-         "incoming bands -> ONE repartition(band_key) -> salted cross-side "
-         "expansion with inline Hamming gate -> distinct; the registry is "
-         "never exploded or window-counted, and only touched-band rows "
-         "ride the exchange)",
+    lp, _ = link_pairs(cat.read_table("priors_bands"), inc_sig, cfg)
+    dump("incremental link_pairs (plain scan of the whole committed "
+         "priors_bands table -> BroadcastHashJoin against the increment's "
+         "distinct band keys -> union with incoming bands -> ONE "
+         "repartition(band_key) -> salted cross-side expansion with inline "
+         "Hamming gate -> distinct; the registry is never exploded or "
+         "window-counted, and only touched-band rows ride the exchange)",
          lp)
 
     # r7 corpus-assembly operators
