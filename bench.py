@@ -8,9 +8,9 @@ reports per-query seconds + pipeline images/sec.
     {"metric": "e2e_sec", "value": <total>, "unit": "sec",
      "queries": {...}, "sf": <sf>, "images_per_sec": <thr>, ...}
 
-Scaling-efficiency evidence (local[8] vs local[32]) is produced by
-tools/bench_scaling.py, which shells out to this file at two parallelism
-levels and writes BENCH/BASELINE.md.
+Per-layer traces and paired comparisons belong to perfbench/ (see
+perfbench/README.md); BENCH/BASELINE.md holds the historical
+scaling-efficiency runs.
 """
 
 from __future__ import annotations
@@ -29,16 +29,16 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_BENCH_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "6000"))
 # best-of-N per query: this sandbox shows 2-3x wall-clock jitter between
 # runs (see BENCH/BASELINE.md), so a single-shot number is noise — the
-# round-2 "regression" was pure host jitter.  tools/bench_scaling.py has
-# used best-of-N from the start; the driver-facing harness now matches.
+# round-2 "regression" was pure host jitter, so the harness takes the
+# best of N.
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 N_PIPE_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_PIPE_RUNS", "3"))
 
 # --- host-weather probe ------------------------------------------------------
 # The round-4 driver record was taken in a noisy host window and showed a
 # phantom 1.7x regression (judge re-ran identical code at 2.1x faster).
-# Defense: a ~1s single-core fmix64 kernel (same int64 in-place discipline
-# as tools/host_ceiling.py) measures host weather BEFORE the bench and
+# Defense: a ~1s single-core fmix64 kernel (int64, in place) measures
+# host weather BEFORE the bench and
 # AFTER each measurement pass.  If the probe runs > PROBE_NOISY_RATIO x its
 # recorded quiet-window time (BENCH/probe_quiet.json), the harness waits
 # and retries (bounded), and re-runs the measurement pass when the window

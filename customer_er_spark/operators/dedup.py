@@ -32,9 +32,7 @@ from customer_er_spark.functions.minhash import make_minhash_udf
 from customer_er_spark.functions.text import normalize_caption
 from customer_er_spark.operators.banded import banded_pairs
 from customer_er_spark.operators.components import connected_components
-from customer_er_spark.operators.materialize import (
-    materialize, owned, scratch_name, shared,
-)
+from customer_er_spark.operators.materialize import materialize, owned, shared
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -95,15 +93,9 @@ def minhash_lsh_pairs(
     jaccard_min: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    catalog=None,
-    table: str | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs via MinHash LSH, verified by the signature
     Jaccard estimate: (id_l, id_r, jacc).
-
-    Catalog-mode scratch output defaults to a per-parameters table name
-    (scratch_name), so concurrent calls with different configs sharing one
-    catalog never clobber each other's intermediates.
 
     Scale shape: band rows -> banded_pairs (ONE exchange, in-partition pair
     expansion, hot-band sub-salting with representative chaining, distinct)
@@ -111,17 +103,13 @@ def minhash_lsh_pairs(
     for the Jaccard-estimate verify.  A duplicate flood of m identical docs
     costs O(m * max_band_size) pairs, not O(m^2).
 
-    The output is an operators/materialize cut: committed to `catalog`
-    when one is given, else persisted and owned by the caller (free it
-    with unpersist()).  Everything cached to build it is released before
-    return."""
+    The output is an operators/materialize cut, persisted and owned by
+    the caller (free it with unpersist()).  Everything cached to build it
+    is released before return."""
     cfg = cfg or ERConfig()
-    if table is None:
-        table = scratch_name("minhash_pairs", cfg.config_hash(), jaccard_min)
     with owned():
         return materialize(
-            _minhash_verified(docs, cfg, jaccard_min, id_col, text_col),
-            catalog, table, config_hash=cfg.config_hash(),
+            _minhash_verified(docs, cfg, jaccard_min, id_col, text_col)
         )
 
 

@@ -34,9 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from customer_er_spark.operators.materialize import (
-    materialize, owned, scratch_name, shared,
-)
+from customer_er_spark.operators.materialize import materialize, owned, shared
 
 
 def _dot_unrolled(left: str, right: str, dim: int) -> Column:
@@ -169,8 +167,6 @@ def lsh_topk(
     vec_col: str = "embedding",
     max_bucket_size: int = 256,
     shuffle_partitions: int = 32,
-    catalog=None,
-    table: str | None = None,
     broadcast_score_max_rows: int = 1_000_000,
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane buckets (n_tables independent
@@ -187,10 +183,9 @@ def lsh_topk(
     `broadcast_score_max_rows` (~0.5 GB at dim 64) fall back to joining
     the vectors onto the distinct candidate pairs, the prior plan.
 
-    The output is an operators/materialize cut: committed to `catalog`
-    when one is given, else persisted and owned by the caller (free it
-    with unpersist()).  Everything cached to build it is released before
-    return."""
+    The output is an operators/materialize cut, persisted and owned by
+    the caller (free it with unpersist()).  Everything cached to build it
+    is released before return."""
     from customer_er_spark.operators.banded import banded_pairs
 
     planes = hyperplane_keys(dim, n_planes, n_tables, seed)
@@ -208,10 +203,6 @@ def lsh_topk(
 
     from customer_er_spark.functions.partitioning import fan_out
 
-    if table is None:  # per-parameters name: no cross-call clobber
-        table = scratch_name(
-            "lsh_topk", k, dim, n_planes, n_tables, seed, max_bucket_size
-        )
     # adaptive fan-out before the bucket UDF: a compact parquet input (one
     # row group) otherwise runs the whole Python stage on ONE task (same
     # lesson as signatures.compute_signatures); no-op on well-split scans.
@@ -252,12 +243,10 @@ def lsh_topk(
         w = Window.partitionBy("query_id").orderBy(
             F.col("cos").desc(), F.col("neighbor_id").asc()
         )
-        return materialize(  # n*k rows — small; durable when a catalog is given
+        return materialize(  # n*k rows — small
             scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank"),
-            catalog,
-            table,
+            .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
         )
 
 
@@ -416,8 +405,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_train: int = 65536,
-    catalog=None,
-    table: str | None = None,
 ) -> DataFrame:
     """Approximate top-k via IVF: (query_id, neighbor_id, cos, rank).
 
@@ -453,10 +440,6 @@ def ivf_topk(
         32,
         "vid",
     )
-    if table is None:  # per-parameters name: no cross-call clobber
-        table = scratch_name(
-            "ivf_topk", k, dim, n_centroids, n_probe, iters, cell_cap, max_train
-        )
     with owned():
         base = shared(base)
 
@@ -487,7 +470,5 @@ def ivf_topk(
         return materialize(
             scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank"),
-            catalog,
-            table,
+            .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
         )

@@ -236,8 +236,6 @@ def verify_pairs(
     pairs: DataFrame,
     signatures: DataFrame,
     cfg: ERConfig,
-    catalog=None,
-    table_prefix: str | None = None,
 ) -> DataFrame:
     """-> (id_l, id_r, hamming, caption_sim, image_sim, score, is_match)
 
@@ -260,6 +258,11 @@ def verify_pairs(
 
     No broadcast hints anywhere: the refinement sets are data-dependent;
     AQE picks broadcast at runtime when a side is actually small.
+
+    The hamming gate and the attached base are shared() barriers
+    (operators/materialize) owned by the caller's owned() scope: a caller
+    that materializes the result opens the scope around the call and its
+    action, and outside any scope the two subplans recompute per branch.
     """
     # tier-0 input: callers whose pair generator already paid for the
     # hashes (the banded candidate join emits phash_l/phash_r; the
@@ -299,17 +302,10 @@ def verify_pairs(
             )
             .select("id_l", "id_r", "hamming")
         )
-    # narrow (3 columns) but feeds both branches: a shared barrier — a
-    # durable snapshot commit when a catalog is supplied, else a lazy
-    # persist owned by the caller's owned() scope (operators/materialize).
-    # The default scratch prefix folds in the config hash so two pipelines
-    # sharing one catalog never clobber each other's intermediates.
+    # narrow (3 columns) but feeds both branches: a shared barrier
     from customer_er_spark.operators.materialize import shared
 
-    if table_prefix is None:
-        table_prefix = f"verify_tmp_{cfg.config_hash()[:8]}"
-    ph = shared(ph, catalog, f"{table_prefix}_hamming",
-                config_hash=cfg.config_hash())
+    ph = shared(ph)
     passed = ph.where(F.col("hamming") <= F.lit(cfg.phash_hamming_max))
     failed = ph.where(F.col("hamming") > F.lit(cfg.phash_hamming_max))
 
@@ -331,12 +327,7 @@ def verify_pairs(
         / F.lit(float(cfg.num_hashes)),
     )
     # feeds the LCS refinement subquery AND the final scoring scan
-    base = shared(
-        base.drop("mh_l", "mh_r", "phash_l", "phash_r"),
-        catalog,
-        f"{table_prefix}_base",
-        config_hash=cfg.config_hash(),
-    )
+    base = shared(base.drop("mh_l", "mh_r", "phash_l", "phash_r"))
 
     border_lcs = (
         base.where(

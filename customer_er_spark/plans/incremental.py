@@ -67,7 +67,7 @@ from customer_er_spark.operators.candidates import (
     candidate_pairs,
 )
 from customer_er_spark.operators.components import connected_components
-from customer_er_spark.operators.materialize import materialize, owned, scratch_name
+from customer_er_spark.operators.materialize import owned
 from customer_er_spark.operators.signatures import compute_signatures
 from customer_er_spark.operators.verify import verify_pairs
 
@@ -268,34 +268,25 @@ def run_link(
         )
     pairs = catalog.read_table("link_candidates")
 
-    # verify's internal barriers (hamming gate / base attach) go through
-    # the catalog too: every intermediate of the catalog-mode link is a
-    # committed snapshot, replayable after executor loss (r5 verdict #2)
-    scr_lverify = scratch_name(
-        "link_verify", link_inputs["incoming_signatures"], ch
-    )
     both_sig = priors_sig.unionByName(inc_sig)
-    scored = verify_pairs(
-        pairs, both_sig, cfg, catalog=catalog, table_prefix=scr_lverify
-    ).where("is_match")
-
     members = catalog.read_table("cluster_members").select(
         "image_id", "cluster_id"
     )
-    # persist the REAL link edges (prior endpoint, incoming endpoint, full
-    # verify columns, prior's registry cluster) — the merge appends the
-    # accepted subset into verified_pairs, keeping scores recomputable
-    link_edges = scored.join(
-        members.withColumnRenamed("image_id", "id_l"), "id_l"
-    ).select(*VERIFY_COLS, "cluster_id")
-    catalog.write_table(
-        link_edges, "link_edges", config_hash=ch, inputs=link_inputs,
-        overwrite_schema=True,
-    )
+    # verify's gate and base barriers end with the link_edges commit
+    with owned():
+        scored = verify_pairs(pairs, both_sig, cfg).where("is_match")
+        # persist the REAL link edges (prior endpoint, incoming endpoint,
+        # full verify columns, prior's registry cluster) — the merge
+        # appends the accepted subset into verified_pairs, keeping scores
+        # recomputable
+        link_edges = scored.join(
+            members.withColumnRenamed("image_id", "id_l"), "id_l"
+        ).select(*VERIFY_COLS, "cluster_id")
+        catalog.write_table(
+            link_edges, "link_edges", config_hash=ch, inputs=link_inputs,
+            overwrite_schema=True,
+        )
     linked_raw = catalog.read_table("link_edges")
-    # verify's scratch snapshots are superseded by the committed link_edges
-    catalog.drop_table(f"{scr_lverify}_hamming")
-    catalog.drop_table(f"{scr_lverify}_base")
 
     # reference-shaped `linked` output: one row per record per link group,
     # z_source tags the side, prior z_score = max over its incoming matches
@@ -459,24 +450,20 @@ def run_incremental_match(
         "image_id", F.col("best_cluster").alias("cluster_id")
     )
 
-    # match within incoming (full pipeline, incoming-only); materialized
+    # match within incoming (full pipeline, incoming-only); committed
     # once — reused by components, member scores and the verified append.
-    # Both barriers here go THROUGH the catalog (operators/materialize):
-    # a mid-merge executor loss on a real cluster replays from committed
-    # snapshots (r5 verdict #2); the scratch tables fold the increment
-    # snapshot into their names and are dropped with the CC working table
-    # once the appends commit.
-    scr_matches = scratch_name("incr_matches", inc_snap, ch)
-    scr_assign = scratch_name("incr_assign", inc_snap, ch)
-    scr_verify = scratch_name("incr_verify", inc_snap, ch)
-    with owned():  # the kernel's salted-band barrier ends with this commit
+    # Both cuts are planner-owned catalog tables, read back from their
+    # snapshots and dropped with the CC working table once the appends
+    # commit.  A commit measured faster here than a lazy persist of the
+    # same cut.
+    with owned():  # the kernel's and verify's barriers end with this commit
         pairs, _ = candidate_pairs(inc_sig, cfg)
-        matches = materialize(
-            verify_pairs(
-                pairs, inc_sig, cfg, catalog=catalog, table_prefix=scr_verify
-            ).where("is_match"),
-            catalog, scr_matches, config_hash=ch, inputs=lineage,
+        catalog.write_table(
+            verify_pairs(pairs, inc_sig, cfg).where("is_match"),
+            "incr_matches", config_hash=ch, inputs=lineage,
+            overwrite_schema=True,
         )
+    matches = catalog.read_table("incr_matches")
     # records accepted into the registry must not also seed new clusters:
     # drop within-incoming edges touching accepted records (their cluster
     # membership is already decided; the remaining graph re-clusters)
@@ -485,15 +472,16 @@ def run_incremental_match(
         matches.join(acc_ids, matches.id_l == acc_ids.aid, "left_anti")
         .join(acc_ids, F.col("id_r") == acc_ids.aid, "left_anti")
     )
-    new_assign = materialize(
+    catalog.write_table(
         connected_components(
             rem.select("id_l", "id_r"), cfg.cc_checkpoint_every,
             catalog=catalog, checkpoint_table="cc_edges_incremental",
             inputs={**lineage, "config": ch},  # durable mid-fixpoint resume
             driver_max_edges=cfg.cc_driver_max_edges,
         ),
-        catalog, scr_assign, config_hash=ch, inputs=lineage,
+        "incr_assign", config_hash=ch, inputs=lineage, overwrite_schema=True,
     )
+    new_assign = catalog.read_table("incr_assign")
 
     # merged assignment for every incoming record
     inc_ids = inc_sig.select("image_id")
@@ -567,15 +555,12 @@ def run_incremental_match(
         .withColumn("datetime", F.current_timestamp())
     )
     catalog.write_table(clusters, "clusters", config_hash=ch)
-    # the durable CC working table and merge scratch snapshots served
-    # their purpose once the appends committed — drop them (mirrors
+    # the durable CC working table and the merge's two cuts served their
+    # purpose once the appends committed — drop them (mirrors
     # pipeline.py's drop of cc_edges) so the last increment's
     # intermediates don't linger in the catalog forever
-    catalog.drop_table("cc_edges_incremental")
-    catalog.drop_table(scr_matches)
-    catalog.drop_table(scr_assign)
-    catalog.drop_table(f"{scr_verify}_hamming")
-    catalog.drop_table(f"{scr_verify}_base")
+    for t in ("cc_edges_incremental", "incr_matches", "incr_assign"):
+        catalog.drop_table(t)
     summary = {
         "incoming": catalog.table_meta("incoming_signatures")["counts"]["rows_out"],
         "accepted_into_registry": n_accepted,

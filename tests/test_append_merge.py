@@ -271,11 +271,13 @@ def test_refresh_member_scores(spark, append_run):
 def test_catalog_mode_merge_has_no_localcheckpoint(
     spark, small_corpus, tmp_path, monkeypatch
 ):
-    """r5 verdict #2: with a durable catalog, EVERY execution barrier of
-    the incremental path (link verify internals, within-incoming matches,
-    CC rounds at cc_checkpoint_every=1, new assignments) commits through
-    the catalog — localCheckpoint (non-recomputable after executor loss)
-    must never be reached.  Enforced by making it explode."""
+    """With a durable catalog the increment commits exactly its resume
+    points and registry appends, plus the merge's two planner-owned cuts
+    (incr_matches, incr_assign) — verify's barriers stay in Spark storage
+    and write no scratch table.  No barrier of the incremental path (CC
+    rounds at cc_checkpoint_every=1 included) reaches localCheckpoint,
+    whose blocks are not recomputable after executor loss; enforced by
+    making it explode."""
     from customer_er_spark.catalog import SparkCatalog
     from pyspark.sql import DataFrame
 
@@ -292,15 +294,35 @@ def test_catalog_mode_merge_has_no_localcheckpoint(
             "localCheckpoint reached in catalog-mode incremental path"
         )
 
+    committed: list[str] = []
+
+    def recording(attr):
+        orig = getattr(SparkCatalog, attr)
+
+        def commit(self, df, name, *args, **kwargs):
+            committed.append(name)
+            return orig(self, df, name, *args, **kwargs)
+
+        return commit
+
     monkeypatch.setattr(DataFrame, "localCheckpoint", boom)
+    for attr in ("write_table", "append_table"):
+        monkeypatch.setattr(SparkCatalog, attr, recording(attr))
     run_link(spark, incoming, catalog, cfg, run_key="durable")
     summary = run_incremental_match(spark, incoming, catalog, cfg)
     assert summary["total_members"] == small_corpus["rows"]
-    # merge scratch snapshots are cleaned up after the appends commit
+    assert committed == [
+        # run_link: resume points and the audit tables
+        "incoming_signatures", "link_band_stats", "link_candidates",
+        "link_edges", "linked", "link_decisions", "link_review",
+        # run_incremental_match: the two cuts, the appends, clusters
+        "incr_matches", "incr_assign", "cluster_members", "verified_pairs",
+        "signatures", "priors_bands", "clusters",
+    ], committed
+    # the merge's cuts are dropped after the appends commit
     leftovers = [
         t for t in catalog.list_tables()
-        if t.startswith(("incr_matches", "incr_assign", "incr_verify",
-                         "link_verify", "cc_edges_incremental"))
+        if t in ("incr_matches", "incr_assign", "cc_edges_incremental")
     ]
     assert leftovers == [], leftovers
 

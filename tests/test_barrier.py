@@ -146,16 +146,6 @@ def test_operator_leaves_only_its_output_cut(spark, name):
     assert _persistent_rdds(spark) - before == set()
 
 
-def test_catalog_mode_operators_leave_nothing(spark, catalog):
-    from customer_er_spark.operators import dedup, similarity
-
-    before = _persistent_rdds(spark)
-    dedup.minhash_lsh_pairs(_docs(spark), CFG, catalog=catalog).collect()
-    similarity.lsh_topk(_vectors(spark), k=3, dim=16, shuffle_partitions=8,
-                        catalog=catalog).collect()
-    assert _persistent_rdds(spark) - before == set()
-
-
 def test_verify_in_scope_releases(spark, small_corpus):
     """verify_pairs' shared barriers belong to the caller's scope."""
     from customer_er_spark.operators.candidates import candidate_pairs

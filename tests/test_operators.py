@@ -439,121 +439,6 @@ def test_ann_violations_non_vacuous(spark, embeddings):
     assert _ann_violations(embeddings, real, k=5, dim=64).count() == 0
 
 
-def test_minhash_pairs_catalog_durable(spark, catalog):
-    """With a catalog, operator-internal materialization is a committed
-    snapshot (recomputable after executor loss), not a localCheckpoint
-    pinned to executors — and no cached blocks outlive the call."""
-    from customer_er_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-
-    def persisted_ids():
-        # id SET, not size: the ContextCleaner may GC blocks from earlier
-        # tests concurrently, so only net-NEW ids are this call's leak
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return set(jmap.keySet().toArray())
-
-    from customer_er_spark.operators.materialize import scratch_name
-
-    cfg8 = ERConfig(shuffle_partitions=8)
-    before = persisted_ids()
-    out = minhash_lsh_pairs(docs, cfg8, jaccard_min=0.5, catalog=catalog)
-    rows = out.count()
-    tname = scratch_name("minhash_pairs", cfg8.config_hash(), 0.5)
-    meta = catalog.table_meta(tname)
-    assert meta is not None and meta["counts"]["rows_out"] == rows
-    # the handle reads the committed parquet, and nothing stayed cached
-    assert catalog.read_table(tname).count() == rows
-    leaked = persisted_ids() - before
-    assert not leaked, f"operator left persisted blocks: {leaked}"
-
-
-def test_lsh_and_ivf_topk_catalog_durable(spark, catalog, embeddings):
-    """The ANN operators' catalog mode must produce the same rows as the
-    no-catalog mode and leave a committed snapshot."""
-    from customer_er_spark.operators.materialize import scratch_name
-    from customer_er_spark.operators.similarity import ivf_topk, lsh_topk
-
-    local = lsh_topk(embeddings, k=3, dim=64, n_planes=4, n_tables=8)
-    durable = lsh_topk(
-        embeddings, k=3, dim=64, n_planes=4, n_tables=8, catalog=catalog
-    )
-    assert catalog.table_meta(
-        scratch_name("lsh_topk", 3, 64, 4, 8, 17, 256)
-    ) is not None
-    assert local.exceptAll(durable).count() == 0
-    assert durable.exceptAll(local).count() == 0
-
-    ivf = ivf_topk(
-        embeddings, k=3, dim=64, n_centroids=8, n_probe=4, catalog=catalog
-    )
-    meta = catalog.table_meta(
-        scratch_name("ivf_topk", 3, 64, 8, 4, 25, 4096, 65536)
-    )
-    assert meta is not None and meta["counts"]["rows_out"] == ivf.count()
-
-
-def test_verify_pairs_catalog_mode(spark, catalog):
-    """verify_pairs' internal materializations commit as snapshot tables
-    when a catalog is supplied, with identical scoring output."""
-    from customer_er_spark.operators.verify import verify_pairs
-
-    rows = [
-        ("a", "same caption", 0, [1, 2, 3, 4]),
-        ("b", "same caption", 255, [1, 2, 3, 4]),
-        ("c", "other words entirely", 0, [9, 9, 9, 9]),
-    ]
-    sig = spark.createDataFrame(
-        rows,
-        "image_id string, caption_norm string, phash long, minhash array<long>",
-    )
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("a", "c")], "id_l string, id_r string"
-    )
-    cfg = ERConfig(num_hashes=4, bands=2, rows_per_band=2, shuffle_partitions=4)
-    base = {(r["id_l"], r["id_r"]): r for r in verify_pairs(pairs, sig, cfg).collect()}
-    got = {
-        (r["id_l"], r["id_r"]): r
-        for r in verify_pairs(pairs, sig, cfg, catalog=catalog).collect()
-    }
-    assert set(base) == set(got)
-    for k in base:
-        assert base[k]["score"] == got[k]["score"]
-        assert base[k]["is_match"] == got[k]["is_match"]
-    prefix = f"verify_tmp_{cfg.config_hash()[:8]}"
-    assert catalog.table_meta(f"{prefix}_hamming") is not None
-    assert catalog.table_meta(f"{prefix}_base") is not None
-
-
-def test_scratch_tables_do_not_clobber_across_configs(spark, catalog):
-    """Two verify_pairs calls with DIFFERENT configs sharing one catalog
-    must land their intermediates in different scratch tables (per-config
-    prefix), so neither call silently overwrites the other's state or
-    trips the schema-change guard."""
-    from customer_er_spark.operators.verify import verify_pairs
-
-    rows = [
-        ("a", "same caption", 0, [1, 2, 3, 4]),
-        ("b", "same caption", 255, [1, 2, 3, 4]),
-    ]
-    sig = spark.createDataFrame(
-        rows,
-        "image_id string, caption_norm string, phash long, minhash array<long>",
-    )
-    pairs = spark.createDataFrame([("a", "b")], "id_l string, id_r string")
-    cfg1 = ERConfig(num_hashes=4, bands=2, rows_per_band=2, shuffle_partitions=4)
-    cfg2 = ERConfig(num_hashes=4, bands=2, rows_per_band=2, shuffle_partitions=4,
-                    phash_hamming_max=12)
-    verify_pairs(pairs, sig, cfg1, catalog=catalog).collect()
-    verify_pairs(pairs, sig, cfg2, catalog=catalog).collect()
-    p1 = f"verify_tmp_{cfg1.config_hash()[:8]}"
-    p2 = f"verify_tmp_{cfg2.config_hash()[:8]}"
-    assert p1 != p2
-    for p in (p1, p2):
-        assert catalog.table_meta(f"{p}_hamming") is not None
-        assert catalog.table_meta(f"{p}_base") is not None
-
-
 def test_repetition_stats_hand_computed(spark):
     from customer_er_spark.operators.textops import repetition_stats
 

@@ -7,9 +7,14 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
+import shutil
 import sys
+import tempfile
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it is
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from customer_er_spark.config import ERConfig
 from customer_er_spark.operators.candidates import candidate_pairs
@@ -39,23 +44,14 @@ def main() -> None:
                    + ("\n… (truncated)" if len(s) > 4000 else "")
                    + "\n```\n")
 
-    # any bench corpus works — plans are explain-only (the link section
-    # executes one small write from a .limit(2000) slice)
-    import glob
+    # any corpus works — plans are explain-only (the link section
+    # executes one small write from a .limit(2000) slice), so a small
+    # generated corpus does
+    from customer_er_spark.datagen import write_corpus
 
-    # smallest existing corpus by NUMERIC size (string sort put 10000
-    # before 6000 — r7 advice); plans never execute, so the cold-checkout
-    # fallback generates a small corpus, not a 60k one
-    corpus = sorted(
-        glob.glob("/root/repo/data/bench_images_*/images.parquet"),
-        key=lambda p: int(p.split("bench_images_")[1].split("/")[0]),
-    )
-    if not corpus:
-        sys.path.insert(0, "/root/repo/tools")
-        from bench_scaling import corpus as make_corpus
-
-        corpus = [make_corpus(2000) + "/images.parquet"]
-    images = spark.read.parquet(corpus[0])
+    work = tempfile.mkdtemp(prefix="plans_")
+    write_corpus(f"{work}/corpus", n_base=1600, dup_fraction=0.25, seed=42)
+    images = spark.read.parquet(f"{work}/corpus/images.parquet")
     sig = compute_signatures(images, cfg)
     dump("signatures stage (projection excludes bytes; explicit repartition; "
          "pandas UDFs)", sig)
@@ -108,13 +104,11 @@ def main() -> None:
     # incremental link over a COMMITTED priors_bands table (the one section
     # that executes a small write first: the plan must show the scan-join
     # shape, not an in-flight band explode)
-    import tempfile
-
     from customer_er_spark.catalog import SparkCatalog
     from customer_er_spark.operators.candidates import band_keys
     from customer_er_spark.plans.incremental import link_pairs
 
-    cat = SparkCatalog(spark, tempfile.mkdtemp(prefix="plans_cat_"))
+    cat = SparkCatalog(spark, f"{work}/catalog")
     psig = compute_signatures(images.limit(2000), cfg)
     cat.write_table(band_keys(psig, cfg), "priors_bands",
                     config_hash=cfg.config_hash())
@@ -150,7 +144,8 @@ def main() -> None:
          "hash agg per island)",
          duplicate_spans(docs, min_len=30))
     spark.stop()
-    with open("/root/repo/PLANS.md", "w") as f:
+    shutil.rmtree(work, ignore_errors=True)
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
 
 
