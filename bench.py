@@ -24,8 +24,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from customer_er_spark.session import default_cpus
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 N_BENCH_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "6000"))
 # best-of-N per query: this sandbox shows 2-3x wall-clock jitter between
 # runs (see BENCH/BASELINE.md), so a single-shot number is noise — the

@@ -5,8 +5,8 @@ The reference "trains" a model from human-labeled pairs
 persists it to a model directory (02B:233-242).  Our engine has no learned
 weights: the "model" is this fixed, versioned signature configuration.  Its
 hash is recorded in every checkpoint manifest so a stage only resumes when
-the config that produced it is identical (the recall>=0.99 contract in
-BASELINE.json holds "at identical shingle/signature config").
+the config that produced it has the same semantics (the recall>=0.99
+contract in BASELINE.json holds "at identical shingle/signature config").
 """
 
 from __future__ import annotations
@@ -79,6 +79,10 @@ class FieldDef:
             )
 
 
+_EXECUTION_KNOBS = ("shuffle_partitions", "cc_checkpoint_every",
+                    "cc_driver_max_edges")
+
+
 @dataclass(frozen=True)
 class ERConfig:
     # --- caption MinHash ---------------------------------------------------
@@ -98,7 +102,6 @@ class ERConfig:
     # AND ~1e4x fewer random collisions (C(8,2)=28 keys of 16 effective
     # bits vs 4 keys of 16 bits).
     phash_chunks: int = 8
-    phash_clean_chunks: int = 2  # chunks per band key
     phash_hamming_max: int = 10  # verify threshold on full 64-bit Hamming
 
     # --- verification / scoring --------------------------------------------
@@ -151,7 +154,14 @@ class ERConfig:
     psnr_min_db: float = 40.0    # lossy decode invariant
 
     def config_hash(self) -> str:
-        payload = json.dumps(asdict(self), sort_keys=True, default=str)
+        """Hash of the fields that decide what a stage outputs.  Execution
+        knobs (shuffle sizing, connected-components lineage truncation and
+        driver fast-path size) change how a stage runs, not its rows, so a
+        catalog resumes across them."""
+        fields = asdict(self)
+        for knob in _EXECUTION_KNOBS:
+            del fields[knob]
+        payload = json.dumps(fields, sort_keys=True, default=str)
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
     def __post_init__(self) -> None:

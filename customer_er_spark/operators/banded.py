@@ -10,6 +10,11 @@ module centralizes the skew-safe version so no operator can regress to the
 quadratic shape (round-2 verdict: the flagship had the protection,
 operators/dedup.py and operators/similarity.py did not).
 
+The incremental link (plans/incremental.link_pairs) salts its touched
+bands with the same salted_bands but expands each sub-bucket bipartitely,
+prior x incoming: a self-join there would list every same-side pair of a
+touched sub-bucket only to drop it.
+
 Policy (identical to the flagship pipeline's, formerly inlined in
 operators/candidates.py — see /root/reference/README.md:5, "mathematical
 short-cuts that limit which records should be compared"):

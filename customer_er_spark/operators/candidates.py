@@ -11,7 +11,7 @@ never collide across sources):
     Jaccard s collide with prob 1-(1-s^r)^b.
   * pHash chunks: the 64-bit perceptual hash split into `phash_chunks`
     equal chunks; multi-index pair-of-chunks keys — by pigeonhole, any pair
-    with Hamming(phash) <= chunks - clean_chunks shares at least one key —
+    with Hamming(phash) <= chunks - 2 shares at least one key —
     guaranteed recall for visually near-identical pairs regardless of
     caption damage.
 
@@ -33,7 +33,7 @@ splits input partitions but cannot bound the O(m^2) *output* of a hot band):
   band*; the salt folds in band_key, so co-location events are independent
   across the (typically many) bands a true pair shares — pairs with caption
   Jaccard s share ~b*s^r MinHash bands and near-identical images share up
-  to C(chunks, clean) pHash keys, so the miss probability decays
+  to C(chunks, 2) pHash keys, so the miss probability decays
   geometrically in the number of shared bands.  Unlike the previous "star"
   policy (every member paired only with the band's min-id rep), no pair's
   survival depends on an arbitrary representative verifying against it.
@@ -50,16 +50,20 @@ downstream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from itertools import combinations
+from math import comb
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from customer_er_spark.config import ERConfig
 from customer_er_spark.operators.banded import banded_pairs
 
 
-def band_keys(signatures: DataFrame, cfg: ERConfig) -> DataFrame:
-    """signatures -> (image_id, band_key) one row per (record, band)."""
-    mh_keys = [
+def minhash_band_key_cols(cfg: ERConfig) -> list[Column]:
+    """One band-key column per MinHash band over a `minhash` array
+    column: xxhash64(band index, the band's rows_per_band values)."""
+    return [
         F.xxhash64(
             F.lit(b),
             *[
@@ -69,6 +73,10 @@ def band_keys(signatures: DataFrame, cfg: ERConfig) -> DataFrame:
         )
         for b in range(cfg.bands)
     ]
+
+
+def band_keys(signatures: DataFrame, cfg: ERConfig) -> DataFrame:
+    """signatures -> (image_id, band_key) one row per (record, band)."""
     chunk_bits = 64 // cfg.phash_chunks
     mask = (1 << chunk_bits) - 1
 
@@ -78,23 +86,19 @@ def band_keys(signatures: DataFrame, cfg: ERConfig) -> DataFrame:
         )
 
     # multi-index pair-of-chunks keys: guarantees recall for
-    # Hamming <= phash_chunks - phash_clean_chunks (see config.py)
-    from itertools import combinations
-
+    # Hamming <= phash_chunks - 2 (see config.py)
     ph_keys = [
         F.xxhash64(F.lit(10_000), F.lit(ci), F.lit(cj), chunk(ci), chunk(cj))
-        for ci, cj in combinations(range(cfg.phash_chunks), cfg.phash_clean_chunks)
-    ] if cfg.phash_clean_chunks == 2 else [
-        F.xxhash64(F.lit(10_000 + c), chunk(c)) for c in range(cfg.phash_chunks)
+        for ci, cj in combinations(range(cfg.phash_chunks), 2)
     ]
     # phash rides along (8 bytes/row): the pair join applies the Hamming
     # feasibility gate BEFORE the distinct shuffle, so random band-key
     # collisions (the dominant candidate volume at scale — measured 17.4M
     # of 17.4M pairs at 240k images) die in codegen without ever being
     # shuffled, deduplicated, or written.
+    keys = [*minhash_band_key_cols(cfg), *ph_keys]
     return signatures.select(
-        "image_id", "phash",
-        F.explode(F.array(*mh_keys, *ph_keys)).alias("band_key"),
+        "image_id", "phash", F.explode(F.array(*keys)).alias("band_key")
     )
 
 
@@ -105,14 +109,7 @@ def bands_per_record(cfg: ERConfig) -> int:
     bands_per_record(cfg) * rows(signatures), or the band table has
     diverged from the registry (e.g. a crash between the two appends) and
     must be re-banded."""
-    from math import comb
-
-    ph = (
-        comb(cfg.phash_chunks, cfg.phash_clean_chunks)
-        if cfg.phash_clean_chunks == 2
-        else cfg.phash_chunks
-    )
-    return cfg.bands + ph
+    return cfg.bands + comb(cfg.phash_chunks, 2)
 
 
 def candidate_pairs_from_bands(
@@ -157,6 +154,6 @@ def candidate_pairs(
     band-key collisions is never shuffled or materialized.
 
     band_stats (degraded bands exact + band-size histogram, see
-    operators/banded.salted_bands) feeds the metrics table.
+    operators/banded.banded_pairs) feeds the metrics table.
     """
     return candidate_pairs_from_bands(band_keys(signatures, cfg), cfg)

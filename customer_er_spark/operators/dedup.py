@@ -31,6 +31,7 @@ from customer_er_spark.config import ERConfig
 from customer_er_spark.functions.minhash import make_minhash_udf
 from customer_er_spark.functions.text import normalize_caption
 from customer_er_spark.operators.banded import banded_pairs
+from customer_er_spark.operators.candidates import minhash_band_key_cols
 from customer_er_spark.operators.components import connected_components
 from customer_er_spark.operators.materialize import materialize, owned, shared
 
@@ -74,16 +75,7 @@ def minhash_band_keys(sig: DataFrame, cfg: ERConfig) -> DataFrame:
     """(doc_id, band_key): one row per (doc, band); the wide minhash array
     is projected AWAY here — pairs are gated and deduplicated on 8-byte
     keys first, signatures join back after (verify-shuffle-width lesson)."""
-    keys = [
-        F.xxhash64(
-            F.lit(b),
-            *[
-                F.element_at("minhash", b * cfg.rows_per_band + r + 1)
-                for r in range(cfg.rows_per_band)
-            ],
-        )
-        for b in range(cfg.bands)
-    ]
+    keys = minhash_band_key_cols(cfg)
     return sig.select("doc_id", F.explode(F.array(*keys)).alias("band_key"))
 
 

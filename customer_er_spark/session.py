@@ -13,13 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Local cores to use: $SPARK_GRAFT_CPUS, else the host's count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "customer_er_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     # In local[N] mode shuffle partitions should track cores, not the 200
     # default; on a real cluster this is sized to executors*cores (AQE

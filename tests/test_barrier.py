@@ -98,6 +98,8 @@ def test_composing_kernel_plans_runs_no_job(spark, small_corpus, tmp_path):
             spark, lambda: candidate_pairs_from_bands(bands, CFG)) == []
         assert _jobs_while(
             spark, lambda: incremental.candidate_pairs(sig, CFG)) == []
+        assert _jobs_while(
+            spark, lambda: incremental.link_pairs(bands, sig, CFG)) == []
 
 
 def _persistent_rdds(spark) -> set:

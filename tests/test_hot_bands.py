@@ -138,3 +138,34 @@ def test_duplicate_flood_stays_one_component(spark):
     comp = assign.select("cluster_id").distinct().collect()
     assert len(comp) == 1, f"flood split into {len(comp)} components"
     assert assign.count() == 200
+
+
+def test_link_flood_pairs_cross_sides_only(spark):
+    """120 identical registry records and 8 identical incoming copies:
+    every touched band is hot, so the link's pairs come from salted
+    sub-buckets.  Each pair still joins a prior to an incoming record, and
+    every incoming copy links."""
+    from customer_er_spark.operators.candidates import band_keys
+    from customer_er_spark.plans.incremental import link_pairs
+
+    rng = random.Random(11)
+    caption = _rand_words(rng, 10)
+    ph = _to_i64(rng.getrandbits(64))
+
+    def images(prefix, n):
+        rows = [(f"{prefix}_{i:04d}", None, 8, 8, "raw", caption, ph)
+                for i in range(n)]
+        return spark.createDataFrame(rows, IMAGES_SCHEMA)
+
+    cfg = ERConfig(shuffle_partitions=8, max_band_size=30)
+    prior_sig = compute_signatures(images("p", 120), cfg).localCheckpoint(eager=True)
+    inc_sig = compute_signatures(images("q", 8), cfg).localCheckpoint(eager=True)
+    pairs, band_stats = link_pairs(band_keys(prior_sig, cfg), inc_sig, cfg)
+
+    assert band_stats.where("degraded").count() > 0
+    got = pairs.collect()
+    assert got
+    assert all(r["id_l"].startswith("p_") and r["id_r"].startswith("q_")
+               for r in got), got
+    assert all(r["hamming"] == 0 for r in got)
+    assert {r["id_r"] for r in got} == {f"q_{i:04d}" for i in range(8)}

@@ -134,11 +134,9 @@ def test_second_increment_does_not_reband_priors(
     # full per-record band fan-out for the new records only
     meta = catalog.table_meta("priors_bands")
     assert len(meta["paths"]) == paths_before + 1
-    from itertools import combinations
+    from customer_er_spark.operators.candidates import bands_per_record
 
-    keys_per_record = CFG.bands + len(
-        list(combinations(range(CFG.phash_chunks), CFG.phash_clean_chunks))
-    )
+    keys_per_record = bands_per_record(CFG)
     assert meta["counts"]["rows_out"] == small_corpus["rows"] * keys_per_record
 
     # and the result is still exact

@@ -70,6 +70,20 @@ def test_config_change_invalidates_resume(spark, small_corpus, pipeline_run):
     assert catalog.snapshot_id("verified_pairs") != snap_before
 
 
+def test_execution_knobs_do_not_invalidate_resume(spark, small_corpus, catalog):
+    """config_hash covers what a stage outputs, not how it runs: the same
+    catalog resumes every stage under a different shuffle_partitions."""
+    images = spark.read.parquet(f"{small_corpus['dir']}/images.parquet")
+    run_initial(spark, images, catalog, ERConfig(shuffle_partitions=4))
+    again = run_initial(spark, images, catalog, ERConfig(shuffle_partitions=8))
+    stages = {k: v["resumed"] for k, v in again.items() if isinstance(v, dict)}
+    assert stages == dict.fromkeys(
+        ("signatures", "priors_bands", "candidate_pairs", "verified_pairs",
+         "calibration_report", "assignments", "cluster_members", "clusters"),
+        True,
+    )
+
+
 def test_decode_invariant_clean(spark, small_corpus):
     from customer_er_spark.operators.verify import check_decode_invariant
 

@@ -34,15 +34,14 @@ def main() -> None:
         "selection, AQE, and where the engine placed shuffles.\n"
     )
 
-    def dump(title, df):
+    def dump(title, df, limit=4000):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         s = buf.getvalue()
-        out.append(f"## {title}\n\n```\n"
-                   + s[:4000]
-                   + ("\n… (truncated)" if len(s) > 4000 else "")
-                   + "\n```\n")
+        if limit is not None and len(s) > limit:
+            s = s[:limit] + "\n… (truncated)"
+        out.append(f"## {title}\n\n```\n{s}\n```\n")
 
     # any corpus works — plans are explain-only (the link section
     # executes one small write from a .limit(2000) slice), so a small
@@ -61,8 +60,8 @@ def main() -> None:
          "shuffled-hash self-join on (band_key, salt) with inline Hamming "
          "gate in the join condition -> distinct; rep chain for hot bands.  "
          "Composed outside an owned() scope, so the salted rows' shared "
-         "barrier is not taken and the full subtree shows)",
-         pairs)
+         "barrier is not taken and the full subtree shows; shown whole)",
+         pairs, limit=None)
     # a small slice: the plan SHAPE is what we're dumping
     from customer_er_spark.operators.verify import verify_pairs
 
@@ -80,16 +79,17 @@ def main() -> None:
 
     # the document-dedup operators now route through the same salted kernel
     # (operators/banded.py) as the flagship: explode -> repartition(band_key)
-    # -> window count (reuses exchange) -> groupBy(band_key, salt) satisfied
-    # by the same partitioning -> in-partition pair expansion, gate in
-    # codegen -> one distinct.  The static plan prints the shared exchange
-    # once per branch; at runtime exchange reuse dedups it.
+    # -> window count (reuses exchange) -> co-partitioned shuffled-hash
+    # self-join on (band_key, salt) satisfied by the same partitioning,
+    # gate in the join condition (codegen) -> one distinct.  The static
+    # plan prints the shared exchange once per branch; at runtime exchange
+    # reuse dedups it.
     from customer_er_spark.operators.dedup import simhash_pairs
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     dump("simhash_pairs (pure-Catalyst md5 SimHash: explode tokens -> 64 "
          "codegen vote aggs -> multi-index pair-of-chunks bands (C(8,2)=28 "
-         "16-bit keys) -> salted in-partition pair expansion with "
+         "16-bit keys) -> salted co-partitioned self-join with "
          "full-Hamming gate -> distinct; NO Python UDF)",
          simhash_pairs(docs, hamming_max=6))
 
@@ -116,11 +116,14 @@ def main() -> None:
     lp, _ = link_pairs(cat.read_table("priors_bands"), inc_sig, cfg)
     dump("incremental link_pairs (plain scan of the whole committed "
          "priors_bands table -> BroadcastHashJoin against the increment's "
-         "distinct band keys -> union with incoming bands -> ONE "
-         "repartition(band_key) -> salted cross-side expansion with inline "
-         "Hamming gate -> distinct; the registry is never exploded or "
-         "window-counted, and only touched-band rows ride the exchange)",
-         lp)
+         "distinct band keys -> side-tagged union with incoming bands -> "
+         "ONE repartition(band_key) -> the blocking kernel's salted_bands "
+         "(window bucket-size count, sub-band salt) -> co-partitioned "
+         "shuffled-hash join of each (band_key, salt) sub-bucket's prior "
+         "rows to its incoming rows with the Hamming gate in the join "
+         "condition -> distinct.  The registry is never exploded, and only "
+         "touched-band rows ride the exchange; shown whole)",
+         lp, limit=None)
 
     # r7 corpus-assembly operators
     from customer_er_spark.operators.pretrain import pack_sequences
