@@ -120,11 +120,8 @@ def candidate_pairs_from_bands(
     pipeline commits them as `priors_bands` so increments can join against
     the registry's bands instead of re-exploding every prior record).
 
-    Emits phash_l/phash_r with every pair (emit_payload): the band join
-    already paid for both hashes, so verify_pairs computes its tier-0
-    Hamming inline instead of re-attaching (id, phash) through two joins
-    — the r5 profile showed those joins as pure fixed cost in the
-    verified_pairs stage (the gate guarantees they add no filtering)."""
+    Emits (id_l, id_r) only: verify_pairs attaches each side's signature
+    row, phash included, and recomputes the Hamming distance there."""
     # ONE exchange total (see operators/banded.py for the full shape): the
     # Hamming feasibility gate runs in-partition, in codegen, BEFORE the
     # distinct shuffle — the quadratic tail of random band-key collisions
@@ -136,7 +133,6 @@ def candidate_pairs_from_bands(
         gate=f"bit_count({{l}}.phash ^ {{r}}.phash) <= {cfg.phash_hamming_max}",
         max_band_size=cfg.max_band_size,
         shuffle_partitions=cfg.shuffle_partitions,
-        emit_payload=True,
     )
 
 

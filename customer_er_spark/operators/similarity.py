@@ -432,12 +432,13 @@ def ivf_topk(
     )
     from customer_er_spark.functions.partitioning import fan_out
 
-    # same adaptive fan-out + broadcast-scorer shape as lsh_topk
+    # same adaptive fan-out + broadcast-scorer shape as lsh_topk, to the
+    # session's shuffle width
     base = fan_out(
         embeddings.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
         ),
-        32,
+        int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")),
         "vid",
     )
     with owned():

@@ -5,10 +5,10 @@ Replaces Zingg's learned pairwise scorer (FUZZY MatchTypes,
 cost-tiered cascade — cheapest check first, each tier runs on strictly
 fewer rows:
 
-  tier 0 (pure SQL)     hamming = bit_count(phash_l XOR phash_r), attached
-                        from an (id, phash)-only projection — gate-failed
-                        pairs (the vast majority of LSH candidates) never
-                        see the wide MinHash arrays or any later tier
+  tier 0 (pure SQL)     hamming = bit_count(phash_l XOR phash_r) over the
+                        attached hashes; pairs over phash_hamming_max are
+                        dropped (a guard: every generator already applies
+                        the same gate inside its band join)
   tier 1 (pure SQL)     caption equality on normalized captions -> sim 1.0
   tier 2 (JVM codegen)  MinHash-Jaccard estimate: mean(sig_l[i]==sig_r[i])
                         via zip_with + aggregate — no Python
@@ -16,12 +16,10 @@ fewer rows:
                         Jaccard lands in the ambiguity band [jacc_lo, jacc_hi)
 
 MATCH  iff hamming <= phash_hamming_max AND caption_sim >= caption_sim_min.
-score = w_caption*caption_sim + w_image*(1 - hamming/64)   (z_score analog);
-gate-failed pairs carry NULL caption_sim/score (they are never matches, and
-pulling captions for them would dominate the shuffle at scale).
+score = w_caption*caption_sim + w_image*(1 - hamming/64)   (z_score analog).
 
-Optionally enforces the per-row decode invariant (PSNR>=40dB lossy / exact
-lossless) on matched pairs when image bytes are supplied.
+check_decode_invariant audits the per-row decode invariant (PSNR>=40dB
+lossy / exact lossless) over an image table.
 """
 
 from __future__ import annotations
@@ -31,6 +29,7 @@ from pyspark.sql import functions as F
 
 from customer_er_spark.config import ERConfig, FieldDef
 from customer_er_spark.functions.text import lcs_ratio_udf
+from customer_er_spark.operators.materialize import shared
 
 
 def _attach_sides(
@@ -239,16 +238,11 @@ def verify_pairs(
 ) -> DataFrame:
     """-> (id_l, id_r, hamming, caption_sim, image_sim, score, is_match)
 
-    Tier-0 FIRST, with the narrowest possible attach: the pHash Hamming
-    gate joins only (image_id, phash) — 8 bytes per side — to every
-    candidate pair (and not even that when the pairs already carry
-    hamming or phash_l/phash_r from their generator — see the tier-0
-    input note in the body).  On realistic corpora the bulk of LSH candidates are
-    random 16-bit band-key collisions that fail this gate; shipping the
-    full MinHash array (~1 KB per side) to those pairs would dominate the
-    verify shuffle (measured: 17.4M candidates for 240k images, almost all
-    gate-rejected).  Gate-failed pairs can never match, so they exit with
-    caption_sim/score = NULL and never touch the caption tiers.
+    Reads only (id_l, id_r) from `pairs`: any other column a generator
+    emits is ignored.  Both sides' signatures attach in one pass, and
+    tier 0 recomputes hamming from the attached hashes.  A pair over
+    phash_hamming_max gets no row: it could never match, and the banded
+    generators (candidate_pairs, link_pairs) never emit one.
 
     Tiers for gate-survivors, each on strictly fewer rows:
       tier 1 (pure SQL)     caption equality -> sim 1.0
@@ -259,72 +253,35 @@ def verify_pairs(
     No broadcast hints anywhere: the refinement sets are data-dependent;
     AQE picks broadcast at runtime when a side is actually small.
 
-    The hamming gate and the attached base are shared() barriers
-    (operators/materialize) owned by the caller's owned() scope: a caller
-    that materializes the result opens the scope around the call and its
-    action, and outside any scope the two subplans recompute per branch.
+    The attached base is a shared() barrier (operators/materialize) owned
+    by the caller's owned() scope: a caller that materializes the result
+    opens the scope around the call and its action, and outside any scope
+    the subplan recomputes per branch.
     """
-    # tier-0 input: callers whose pair generator already paid for the
-    # hashes (the banded candidate join emits phash_l/phash_r; the
-    # incremental link emits hamming itself) skip the two-attach join —
-    # it cannot filter anything the in-band gate didn't, so recomputing
-    # bit_count inline is strictly cheaper than two joins over signatures
-    if "hamming" in pairs.columns:
-        ph = pairs.select("id_l", "id_r", "hamming")
-    elif {"phash_l", "phash_r"}.issubset(pairs.columns):
-        ph = pairs.select(
-            "id_l",
-            "id_r",
-            F.bit_count(
-                F.col("phash_l").bitwiseXOR(F.col("phash_r"))
-            ).alias("hamming"),
-        )
-    else:
-        sig_ph = signatures.select("image_id", "phash")
-        ph = (
-            pairs.join(
-                sig_ph.select(
-                    F.col("image_id").alias("id_l"),
-                    F.col("phash").alias("phash_l"),
-                ),
-                "id_l",
-            )
-            .join(
-                sig_ph.select(
-                    F.col("image_id").alias("id_r"),
-                    F.col("phash").alias("phash_r"),
-                ),
-                "id_r",
-            )
-            .withColumn(
-                "hamming",
-                F.bit_count(F.col("phash_l").bitwiseXOR(F.col("phash_r"))),
-            )
-            .select("id_l", "id_r", "hamming")
-        )
-    # narrow (3 columns) but feeds both branches: a shared barrier
-    from customer_er_spark.operators.materialize import shared
-
-    ph = shared(ph)
-    passed = ph.where(F.col("hamming") <= F.lit(cfg.phash_hamming_max))
-    failed = ph.where(F.col("hamming") > F.lit(cfg.phash_hamming_max))
-
-    # attach captions + MinHash arrays ONLY to gate survivors (plus any
-    # structured FieldDef columns — small scalars, scored in pure SQL)
+    # structured FieldDef columns ride the attach (small scalars, scored
+    # in pure SQL)
     active_fields = tuple(
         f for f in cfg.fields if f.match_type != "DONT_USE"
     )
     extra_cols = tuple(f.column for f in active_fields)
-    base = _attach_sides(passed, signatures, extra_cols).withColumn(
-        "jacc",
-        F.aggregate(
-            F.zip_with(
-                "mh_l", "mh_r", lambda a, b: (a == b).cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    base = (
+        _attach_sides(pairs.select("id_l", "id_r"), signatures, extra_cols)
+        .withColumn(
+            "hamming",
+            F.bit_count(F.col("phash_l").bitwiseXOR(F.col("phash_r"))),
         )
-        / F.lit(float(cfg.num_hashes)),
+        .where(F.col("hamming") <= F.lit(cfg.phash_hamming_max))
+        .withColumn(
+            "jacc",
+            F.aggregate(
+                F.zip_with(
+                    "mh_l", "mh_r", lambda a, b: (a == b).cast("double")
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            / F.lit(float(cfg.num_hashes)),
+        )
     )
     # feeds the LCS refinement subquery AND the final scoring scan
     base = shared(base.drop("mh_l", "mh_r", "phash_l", "phash_r"))
@@ -342,7 +299,7 @@ def verify_pairs(
         )
     )
 
-    scored_pass = (
+    return (
         base.join(border_lcs, ["id_l", "id_r"], "left")
         .withColumn(
             "caption_sim",
@@ -387,16 +344,6 @@ def verify_pairs(
             "score", "is_match",
         )
     )
-    scored_fail = failed.select(
-        "id_l",
-        "id_r",
-        "hamming",
-        F.lit(None).cast("double").alias("caption_sim"),
-        (F.lit(1.0) - F.col("hamming") / F.lit(64.0)).alias("image_sim"),
-        F.lit(None).cast("double").alias("score"),
-        F.lit(False).alias("is_match"),
-    )
-    return scored_pass.unionByName(scored_fail)
 
 
 def check_decode_invariant(

@@ -116,10 +116,10 @@ def link_pairs(
             F.col("phash").alias(f"phash_{sfx}"),
         )
 
-    # hamming rides along (computed for the gate anyway): verify_pairs
-    # skips its tier-0 attach join on pairs that already carry it.
-    # distinct over (id_l, id_r, hamming) equals distinct over the pair —
-    # hamming is a function of the two ids.
+    # hamming rides along as an audit column of link_candidates (computed
+    # for the gate anyway; verify_pairs reads only the ids).  distinct
+    # over (id_l, id_r, hamming) equals distinct over the pair — hamming
+    # is a function of the two ids.
     hamming = F.expr("bit_count(phash_l ^ phash_r)")
     pairs = (
         side("p", "l")

@@ -108,10 +108,11 @@ def run_initial(
         return pairs
 
     # overwrite_schema=True on the pipeline-owned intermediates: an engine
-    # upgrade that adds a column (r6: phash_l/phash_r on candidate_pairs)
-    # must roll forward over a catalog written by the previous version
-    # instead of failing the schema contract (r6 advice).  User-facing
-    # outputs (cluster_members, clusters) keep the strict contract.
+    # upgrade that changes their columns (candidate_pairs lost its
+    # phash_l/phash_r payload once verify_pairs read only the ids) must
+    # roll forward over a catalog written by the previous version instead
+    # of failing the schema contract.  User-facing outputs
+    # (cluster_members, clusters) keep the strict contract.
     cand = stage("candidate_pairs", bands_snap, build_pairs, n_images,
                  overwrite_schema=True)
 

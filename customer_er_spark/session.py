@@ -18,6 +18,18 @@ def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
+def default_driver_memory() -> str:
+    """Driver heap: $SPARK_DRIVER_MEMORY, else half the host's physical
+    memory in whole GiB (at least 1g).  In local mode the driver JVM
+    also runs every task, and the other half stays with the Python
+    workers and the OS page cache."""
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "customer_er_spark",
     master: str | None = None,
@@ -62,7 +74,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # broadcast threshold: small dims (band stats, registry samples)

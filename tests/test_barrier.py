@@ -77,13 +77,15 @@ def _jobs_while(spark, build):
 
 
 def test_composing_kernel_plans_runs_no_job(spark, small_corpus, tmp_path):
-    """The kernel's shared barrier is lazy: building candidate plans, with
-    the barrier taken inside an owned() scope, launches no Spark job."""
+    """The kernel's and verify's shared barriers are lazy: building
+    candidate and verify plans, with the barriers taken inside an owned()
+    scope, launches no Spark job."""
     from customer_er_spark.operators.banded import banded_pairs
     from customer_er_spark.operators.candidates import (
         band_keys,
         candidate_pairs_from_bands,
     )
+    from customer_er_spark.operators.verify import verify_pairs
     from customer_er_spark.plans import incremental
 
     sig = _image_sigs(spark, small_corpus)
@@ -100,6 +102,8 @@ def test_composing_kernel_plans_runs_no_job(spark, small_corpus, tmp_path):
             spark, lambda: incremental.candidate_pairs(sig, CFG)) == []
         assert _jobs_while(
             spark, lambda: incremental.link_pairs(bands, sig, CFG)) == []
+        assert _jobs_while(spark, lambda: verify_pairs(
+            candidate_pairs_from_bands(bands, CFG)[0], sig, CFG)) == []
 
 
 def _persistent_rdds(spark) -> set:

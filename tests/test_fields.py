@@ -5,6 +5,7 @@ implemented as pure-SQL score terms (config.FieldDef + verify.field_sim)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from customer_er_spark.config import ERConfig, FieldDef
 from customer_er_spark.operators.verify import verify_pairs
@@ -15,10 +16,12 @@ CFG_KW = dict(num_hashes=4, bands=2, rows_per_band=2, shuffle_partitions=4)
 def _sig(spark, meta_rows):
     """Two records, identical captions (caption_sim=1.0), hamming 8
     (image_sim=0.875) -> base score 0.9375; `meta_rows` supplies the
-    structured column values."""
+    structured column values.  A third record 'c' is 11 pHash bits from
+    'a', over the default phash_hamming_max of 10."""
     rows = [
         ("a", "same caption", 0, [1, 2, 3, 4], meta_rows[0]),
         ("b", "same caption", 255, [1, 2, 3, 4], meta_rows[1]),
+        ("c", "same caption", 2047, [1, 2, 3, 4], None),
     ]
     return spark.createDataFrame(
         rows,
@@ -32,6 +35,28 @@ def _score(spark, cfg, meta_rows):
     out = verify_pairs(pairs, _sig(spark, meta_rows), cfg).collect()
     assert len(out) == 1
     return out[0]
+
+
+def test_verify_reads_only_the_pair_ids(spark):
+    """A pair over phash_hamming_max gets no row, and payload columns a
+    generator emits (phash_l/phash_r, hamming — here a wrong one) do not
+    change any score: verify_pairs reads only (id_l, id_r)."""
+    cfg = ERConfig(**CFG_KW)
+    sig = _sig(spark, ["x@a.com", "y@b.com"])
+    ids = spark.createDataFrame(
+        [("a", "b"), ("a", "c")], "id_l string, id_r string"
+    )
+    out = verify_pairs(ids, sig, cfg).collect()
+    assert [(r["id_l"], r["id_r"]) for r in out] == [("a", "b")]
+    assert out[0]["hamming"] == 8 and out[0]["score"] == pytest.approx(0.9375)
+
+    ph = sig.select("image_id", "phash")
+    wide = (
+        ids.join(ph.toDF("id_l", "phash_l"), "id_l")
+        .join(ph.toDF("id_r", "phash_r"), "id_r")
+        .withColumn("hamming", F.lit(0))
+    )
+    assert verify_pairs(wide, sig, cfg).collect() == out
 
 
 def test_field_flips_borderline_link_decision(spark):

@@ -67,8 +67,9 @@ def main() -> None:
 
     small_sig = compute_signatures(images.limit(500), cfg)
     small_pairs, _ = candidate_pairs(small_sig, cfg)
-    dump("verify cascade (attach joins; Jaccard zip_with JVM-side; no "
-         "broadcast hint on LCS refinement — AQE decides)",
+    dump("verify cascade ((id_l, id_r) -> one signature attach per side "
+         "-> Hamming filter from the attached hashes -> Jaccard zip_with "
+         "JVM-side; no broadcast hint on LCS refinement — AQE decides)",
          verify_pairs(small_pairs, small_sig, cfg))
     sf = "/root/testdata/sf0.01"
     dump("pricing_summary (pushdown + partial aggregation)",
