@@ -347,8 +347,9 @@ def q_minhash_lsh_pairs(spark, sf):
 
 def q_simhash_pairs(spark, sf):
     # banded in Spark; pigeonhole (8 chunks > hamming_max) makes the banded
-    # result equal DuckDB's brute-force replay of the SAME generated
-    # md5-SimHash bit expressions (operators/dedup.simhash_sql).
+    # result equal DuckDB's brute-force replay, whose md5-SimHash bits come
+    # from generated vote SQL, independent of Spark's Arrow batch kernel
+    # (operators/dedup.simhash_signatures).
     # Same oracle-gate coupling as q_minhash_lsh_pairs: set-equality
     # requires zero degraded bands, so salting is effectively off here
     # (max_band_size 2^30); flood behavior is tests/test_flood.py's job.
@@ -1815,8 +1816,9 @@ def oracle_sql() -> dict[str, str]:
             WITH {_ngram_pairs_cte(0.9, n=5, ratio=(9, 10))}
             SELECT id_l, id_r, n_inter, n_union FROM scored
         """,
-        # simhash_pairs — DuckDB replays the SAME generated md5-SimHash bit
-        # expressions brute-force; pigeonhole banding finds the same set;
+        # simhash_pairs — DuckDB recomputes the md5-SimHash bits with
+        # generated vote SQL and pairs them brute-force; pigeonhole banding
+        # finds the same set;
         "simhash_pairs": _simhash_oracle(),
         # embedding_topk_lsh / embedding_topk_ivf — violations queries:
         # expected-empty relation with a typed schema (cos/rank/dominance

@@ -15,6 +15,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def shuffle_width(df: DataFrame, n: int | None = None) -> int:
+    """n, or the session's spark.sql.shuffle.partitions when n is None."""
+    if n is not None:
+        return n
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
 def fan_out(df: DataFrame, n: int, *cols: str) -> DataFrame:
     """repartition(n, *cols) iff df currently has fewer than n partitions.
 

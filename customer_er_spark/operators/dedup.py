@@ -7,9 +7,9 @@ table — the operator set a large-scale training-data pipeline needs:
   exact_dedup          hash-groupBy on normalized text (pure SQL, md5)
   minhash_lsh_pairs    shingle -> MinHash -> band -> salted in-partition
                        pair expansion (operators/banded.py)
-  simhash_pairs        64-bit md5 SimHash — pure Catalyst (NO Python UDF),
+  simhash_pairs        64-bit md5 SimHash — one mapInArrow batch kernel,
                        banded by pigeonhole chunks through the same salted
-                       kernel, and DuckDB-replayable bit for bit
+                       kernel; DuckDB replays its bits in SQL
   ngram_jaccard_pairs  exact character-n-gram Jaccard via a gram join
                        (pure SQL — the DuckDB-checkable near-dup oracle)
   dedup_clusters       connected components over any pair set -> keep/drop
@@ -19,16 +19,20 @@ operators/banded.banded_pairs — hot buckets (duplicate floods: boilerplate,
 empty strings, error pages that share every band) are sub-salted to
 O(m * max_band_size) pair volume with representative chaining for
 connectivity, never O(m^2).  All declarative where possible; Python only
-inside Arrow-batched pandas UDFs (MinHash signatures).
+inside Arrow-batched kernels (MinHash and SimHash signatures).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from customer_er_spark.config import ERConfig
 from customer_er_spark.functions.minhash import make_minhash_udf
+from customer_er_spark.functions.partitioning import fan_out, shuffle_width
+from customer_er_spark.functions.simhash import md5_simhash_batch
 from customer_er_spark.functions.text import normalize_caption
 from customer_er_spark.operators.banded import banded_pairs
 from customer_er_spark.operators.candidates import minhash_band_key_cols
@@ -53,8 +57,6 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 def minhash_signatures(
     docs: DataFrame, cfg: ERConfig, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    from customer_er_spark.functions.partitioning import fan_out
-
     mh = make_minhash_udf(cfg.shingle_k, cfg.num_hashes, cfg.minhash_seed)
     # adaptive fan-out BEFORE the UDF (same lesson as
     # signatures.compute_signatures): a compact one-row-group parquet
@@ -173,7 +175,7 @@ def _minhash_verified(
 
 
 # ---------------------------------------------------------------------------
-# SimHash — md5-based, pure Catalyst, DuckDB-replayable
+# SimHash — md5-based, one Arrow pass, DuckDB-replayable
 # ---------------------------------------------------------------------------
 #
 # Token hash = first 16 hex chars (64 bits) of md5(token); bit i of the
@@ -182,18 +184,19 @@ def _minhash_verified(
 # positive.  The hash is carried as two non-negative 32-bit halves
 # (sim_lo = bits 0..31, sim_hi = bits 32..63) so every expression stays
 # inside plain BIGINT arithmetic in BOTH engines — no 64-bit sign games.
-# Spark and DuckDB evaluate the *same* generated scalar SQL, so the oracle
-# can never drift from the operator.
+# Spark computes the votes in a numpy batch kernel
+# (functions/simhash.md5_simhash_batch); the oracle computes them with the
+# generated scalar SQL below, so DuckDB checks the kernel independently.
 
 _HEX = "0123456789abcdef"
 
 
-def _simhash_bit_sql(p: int, b: int, instr_fn: str) -> str:
+def _simhash_bit_sql(p: int, b: int) -> str:
     """SQL for bit b of hex digit p of md5 column `m` (0/1)."""
-    return f"(({instr_fn}('{_HEX}', substring(m, {p}, 1)) - 1) >> {b}) & 1"
+    return f"((strpos('{_HEX}', substring(m, {p}, 1)) - 1) >> {b}) & 1"
 
 
-def _simhash_half_sql(bits: range, instr_fn: str) -> str:
+def _simhash_half_sql(bits: range) -> str:
     """SQL assembling SimHash bits `bits` (absolute indices) into one
     non-negative 32-bit half from the vote-count columns c_<i>."""
     terms = [
@@ -203,63 +206,64 @@ def _simhash_half_sql(bits: range, instr_fn: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _simhash_vote_sqls(instr_fn: str) -> list[str]:
+def _simhash_vote_sqls() -> list[str]:
     """64 aggregate SQL strings: c_<i> = sum over tokens of (2*bit_i - 1)."""
     out = []
     for i in range(64):
         p, b = i // 4 + 1, i % 4
-        out.append(
-            f"sum(2 * ({_simhash_bit_sql(p, b, instr_fn)}) - 1) AS c_{i}"
-        )
+        out.append(f"sum(2 * ({_simhash_bit_sql(p, b)}) - 1) AS c_{i}")
     return out
 
 
-def simhash_sql(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+def simhash_signatures(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """(doc_id, sim_hi, sim_lo): 64-bit md5 SimHash as two uint32-valued
-    BIGINT halves — pure Catalyst (explode + md5 + 64 codegen aggregates),
-    no Python in the path.  Docs with empty normalized text are excluded
-    (no tokens -> no signature)."""
-    from customer_er_spark.functions.partitioning import fan_out
-
-    toks = (
-        # adaptive fan-out BEFORE the token explode + md5 + 64 partial-agg
-        # columns: a one-row-group parquet input otherwise runs the whole
-        # map-side vote aggregation (the stage's dominant cost) on ONE
-        # task.  The shuffle moved is just (id, normalized text) — narrow
-        # — and it is a no-op when the scan already offers enough splits.
-        fan_out(
-            docs.select(
-                F.col(id_col).alias("doc_id"),
-                normalize_caption(F.col(text_col)).alias("t"),
-            ).where(F.length("t") > 0),
-            32,
-            "doc_id",
-        )
-        .select("doc_id", F.explode(F.split("t", " ")).alias("tk"))
-        .select("doc_id", F.md5("tk").alias("m"))
-    )
-    votes = toks.groupBy("doc_id").agg(
-        *[F.expr(s) for s in _simhash_vote_sqls("instr")]
-    )
-    return votes.select(
+    BIGINT halves, one mapInArrow pass of functions/simhash.md5_simhash_batch
+    over the normalized text.  Docs with empty normalized text are excluded
+    (no tokens -> no signature).  doc_id keeps its input type;
+    shuffle_partitions=None fans out to the session's shuffle width."""
+    # adaptive fan-out BEFORE the kernel: a one-row-group parquet input
+    # otherwise runs the whole signature pass on ONE task.  The shuffle
+    # moved is just (id, normalized text) — narrow — and it is a no-op
+    # when the scan already offers enough splits.
+    base = fan_out(
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            normalize_caption(F.col(text_col)).alias("t"),
+        ).where(F.length("t") > 0),
+        shuffle_width(docs, shuffle_partitions),
         "doc_id",
-        F.expr(_simhash_half_sql(range(32, 64), "instr")).alias("sim_hi"),
-        F.expr(_simhash_half_sql(range(0, 32), "instr")).alias("sim_lo"),
     )
+    schema = T.StructType([
+        base.schema["doc_id"],
+        T.StructField("sim_hi", T.LongType()),
+        T.StructField("sim_lo", T.LongType()),
+    ])
+
+    def sign(batches):
+        for b in batches:
+            hi, lo = md5_simhash_batch(b.column(1))
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), pa.array(hi), pa.array(lo)],
+                names=["doc_id", "sim_hi", "sim_lo"],
+            )
+
+    return base.mapInArrow(sign, schema=schema)
 
 
-def simhash_oracle_sql(
-    hamming_max: int = 6, table: str = "documents"
-) -> str:
-    """DuckDB replay of simhash_pairs: same generated bit expressions, then
-    a brute-force O(n^2) self-join (the oracle does not band — pigeonhole
-    banding with chunks > hamming_max finds exactly this set)."""
-    norm = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-    votes = ",\n               ".join(_simhash_vote_sqls("strpos"))
-    hi = _simhash_half_sql(range(32, 64), "strpos")
-    lo = _simhash_half_sql(range(0, 32), "strpos")
+def _simhash_signature_sql(table: str) -> str:
+    """DuckDB SQL for (doc_id, sim_hi, sim_lo) over `table`: the same
+    normalization and token split as simhash_signatures, with the votes as
+    generated scalar SQL.  The whitespace class is Java's \\s (RE2's
+    lacks \\x0B), and trim(.., ' ') strips spaces only, as Spark's trim
+    does (DuckDB's one-argument trim also strips NBSP and U+3000)."""
+    norm = (r"trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g'), "
+            r"' ')")
+    votes = ",\n               ".join(_simhash_vote_sqls())
     return f"""
         WITH d AS (SELECT doc_id, {norm} AS t FROM {table}),
         tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS tk
@@ -267,8 +271,22 @@ def simhash_oracle_sql(
         md AS (SELECT doc_id, md5(tk) AS m FROM tok),
         votes AS (SELECT doc_id,
                {votes}
-               FROM md GROUP BY doc_id),
-        sim AS (SELECT doc_id, {hi} AS sim_hi, {lo} AS sim_lo FROM votes)
+               FROM md GROUP BY doc_id)
+        SELECT doc_id, {_simhash_half_sql(range(32, 64))} AS sim_hi,
+               {_simhash_half_sql(range(0, 32))} AS sim_lo
+        FROM votes
+    """
+
+
+def simhash_oracle_sql(
+    hamming_max: int = 6, table: str = "documents"
+) -> str:
+    """DuckDB replay of simhash_pairs: the md5 SimHash votes as generated
+    scalar SQL (independent of the Spark batch kernel), then a brute-force
+    O(n^2) self-join (the oracle does not band — pigeonhole banding with
+    chunks > hamming_max finds exactly this set)."""
+    return f"""
+        WITH sim AS ({_simhash_signature_sql(table)})
         SELECT a.doc_id AS id_l, b.doc_id AS id_r,
                CAST(bit_count(xor(a.sim_hi, b.sim_hi))
                     + bit_count(xor(a.sim_lo, b.sim_lo)) AS INT) AS hamming
@@ -278,6 +296,29 @@ def simhash_oracle_sql(
     """
 
 
+def simhash_band_keys(sim: DataFrame, chunks: int = 8) -> DataFrame:
+    """(doc_id, sim_hi, sim_lo, band_key): one row per unordered pair of
+    the 64-bit SimHash's `chunks` equal slices (see simhash_pairs)."""
+    from itertools import combinations
+
+    cb = 64 // chunks
+    mask = (1 << cb) - 1
+
+    def chunk(c: int):
+        lo_bit = c * cb
+        half = F.col("sim_lo") if lo_bit < 32 else F.col("sim_hi")
+        shift = lo_bit if lo_bit < 32 else lo_bit - 32
+        return F.shiftrightunsigned(half, shift).bitwiseAND(F.lit(mask))
+
+    keys = [
+        F.xxhash64(F.lit(ci), F.lit(cj), chunk(ci), chunk(cj))
+        for ci, cj in combinations(range(chunks), 2)
+    ]
+    return sim.select(
+        "doc_id", "sim_hi", "sim_lo", F.explode(F.array(*keys)).alias("band_key")
+    )
+
+
 def simhash_pairs(
     docs: DataFrame,
     hamming_max: int = 6,
@@ -285,9 +326,13 @@ def simhash_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_band_size: int = 1024,
-    shuffle_partitions: int = 32,
+    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: (id_l, id_r, hamming).
+
+    Signatures come from simhash_signatures (one Arrow batch-kernel pass);
+    shuffle_partitions (None: the session's spark.sql.shuffle.partitions)
+    sizes both its fan-out and the banding exchange.
 
     max_band_size is 1024 here (vs 256 for the image pipeline): 2-chunk
     SimHash keys on natural text still concentrate a few hundred documents
@@ -326,25 +371,9 @@ def simhash_pairs(
             f"hamming_max {hamming_max} exceeds the pigeonhole guarantee of "
             f"{chunks} chunks in pairs (recall only assured up to {chunks - 2})"
         )
-    sim = simhash_sql(docs, id_col, text_col)
-    cb = 64 // chunks
-    mask = (1 << cb) - 1
-
-    def chunk(c: int):
-        lo_bit = c * cb
-        half = F.col("sim_lo") if lo_bit < 32 else F.col("sim_hi")
-        shift = lo_bit if lo_bit < 32 else lo_bit - 32
-        return F.shiftrightunsigned(half, shift).bitwiseAND(F.lit(mask))
-
-    from itertools import combinations
-
-    keys = [
-        F.xxhash64(F.lit(ci), F.lit(cj), chunk(ci), chunk(cj))
-        for ci, cj in combinations(range(chunks), 2)
-    ]
-    bands = sim.select(
-        "doc_id", "sim_hi", "sim_lo", F.explode(F.array(*keys)).alias("band_key")
-    )
+    shuffle_partitions = shuffle_width(docs, shuffle_partitions)
+    sim = simhash_signatures(docs, id_col, text_col, shuffle_partitions)
+    bands = simhash_band_keys(sim, chunks)
     gate = (
         f"(bit_count({{l}}.sim_hi ^ {{r}}.sim_hi) "
         f"+ bit_count({{l}}.sim_lo ^ {{r}}.sim_lo)) <= {hamming_max}"

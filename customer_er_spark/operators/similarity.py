@@ -166,7 +166,7 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int = 256,
-    shuffle_partitions: int = 32,
+    shuffle_partitions: int | None = None,
     broadcast_score_max_rows: int = 1_000_000,
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane buckets (n_tables independent
@@ -182,6 +182,7 @@ def lsh_topk(
     ~1 s on the 14.5M-candidate sf1.0 bench stage); tables over
     `broadcast_score_max_rows` (~0.5 GB at dim 64) fall back to joining
     the vectors onto the distinct candidate pairs, the prior plan.
+    shuffle_partitions=None uses the session's spark.sql.shuffle.partitions.
 
     The output is an operators/materialize cut, persisted and owned by
     the caller (free it with unpersist()).  Everything cached to build it
@@ -201,8 +202,9 @@ def lsh_topk(
             out.append([int(t) * (1 << n_planes) + int(c) for t, c in enumerate(row)])
         return pd.Series(out)
 
-    from customer_er_spark.functions.partitioning import fan_out
+    from customer_er_spark.functions.partitioning import fan_out, shuffle_width
 
+    shuffle_partitions = shuffle_width(embeddings, shuffle_partitions)
     # adaptive fan-out before the bucket UDF: a compact parquet input (one
     # row group) otherwise runs the whole Python stage on ONE task (same
     # lesson as signatures.compute_signatures); no-op on well-split scans.
@@ -430,7 +432,7 @@ def ivf_topk(
     cents = kmeans_centroids(
         embeddings, n_centroids, dim, iters, id_col, vec_col, max_train=max_train
     )
-    from customer_er_spark.functions.partitioning import fan_out
+    from customer_er_spark.functions.partitioning import fan_out, shuffle_width
 
     # same adaptive fan-out + broadcast-scorer shape as lsh_topk, to the
     # session's shuffle width
@@ -438,7 +440,7 @@ def ivf_topk(
         embeddings.select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
         ),
-        int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+        shuffle_width(embeddings),
         "vid",
     )
     with owned():

@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from customer_er_spark.functions.partitioning import shuffle_width
 from customer_er_spark.operators.banded import banded_pairs
 from customer_er_spark.operators.materialize import materialize, owned
 
@@ -115,7 +116,7 @@ def sparse_cosine_join(
     threshold: float,
     *,
     max_band_size: int = 256,
-    shuffle_partitions: int = 32,
+    shuffle_partitions: int | None = None,
     with_stats: bool = False,
 ):
     """Exact all-pairs cosine join over sparse integer vectors.
@@ -125,14 +126,17 @@ def sparse_cosine_join(
     id_a < id_b, cos = round(dot / (||a|| * ||b||), 6), for every pair with
     unrounded cosine >= threshold (see module docstring for the
     completeness bound and the flood caveat).  with_stats=True also returns
-    the banded kernel's band_stats audit DataFrame.
+    the banded kernel's band_stats audit DataFrame.  shuffle_partitions
+    (None: the session's spark.sql.shuffle.partitions) sizes the banding
+    exchange.
 
     Every returned DataFrame is an output cut (operators/materialize):
     persisted and owned by the caller, who frees it with unpersist().
     """
     with owned():
         out, band_stats = _sparse_cosine_join(
-            feats, threshold, max_band_size, shuffle_partitions
+            feats, threshold, max_band_size,
+            shuffle_width(feats, shuffle_partitions),
         )
         if with_stats:
             return materialize(out), materialize(band_stats)
@@ -221,7 +225,7 @@ def cosine_near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_band_size: int = 256,
-    shuffle_partitions: int = 32,
+    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs over a documents table.
 

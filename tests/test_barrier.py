@@ -78,12 +78,16 @@ def _jobs_while(spark, build):
 
 def test_composing_kernel_plans_runs_no_job(spark, small_corpus, tmp_path):
     """The kernel's and verify's shared barriers are lazy: building
-    candidate and verify plans, with the barriers taken inside an owned()
-    scope, launches no Spark job."""
+    candidate, verify and SimHash signature plans, with the barriers taken
+    inside an owned() scope, launches no Spark job."""
     from customer_er_spark.operators.banded import banded_pairs
     from customer_er_spark.operators.candidates import (
         band_keys,
         candidate_pairs_from_bands,
+    )
+    from customer_er_spark.operators.dedup import (
+        simhash_band_keys,
+        simhash_signatures,
     )
     from customer_er_spark.operators.verify import verify_pairs
     from customer_er_spark.plans import incremental
@@ -104,6 +108,17 @@ def test_composing_kernel_plans_runs_no_job(spark, small_corpus, tmp_path):
             spark, lambda: incremental.link_pairs(bands, sig, CFG)) == []
         assert _jobs_while(spark, lambda: verify_pairs(
             candidate_pairs_from_bands(bands, CFG)[0], sig, CFG)) == []
+
+    # the SimHash kernel sizes nothing with an action: fan-out width and
+    # the output schema come from the plan
+    _docs(spark).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    with owned():
+        assert _jobs_while(spark, lambda: simhash_signatures(docs)) == []
+        assert _jobs_while(spark, lambda: banded_pairs(
+            simhash_band_keys(simhash_signatures(docs)), id_col="doc_id",
+            payload_cols=("sim_hi", "sim_lo"), max_band_size=1024,
+            shuffle_partitions=CFG.shuffle_partitions)) == []
 
 
 def _persistent_rdds(spark) -> set:

@@ -1,9 +1,13 @@
+import hashlib
+from collections import Counter
+
 import numpy as np
 import pytest
 
 from customer_er_spark.functions.hashing import mix_keys, shingle_hashes, splitmix64
 from customer_er_spark.functions.minhash import jaccard_estimate, minhash_batch
-from customer_er_spark.functions.simhash import simhash64
+from customer_er_spark.functions import simhash
+from customer_er_spark.functions.simhash import md5_simhash_batch, simhash64
 from customer_er_spark.functions.text import lcs_ratio, longest_common_substring
 
 
@@ -93,6 +97,69 @@ def test_simhash_near_far():
     assert ham(ha, hb) < ham(ha, hc)
     assert ham(ha, hb) <= 8
     assert simhash64("") == 0
+
+
+def _md5_votes(text: str) -> list[int]:
+    """Brute-force md5 SimHash votes: hex digit i//4 of each token's md5,
+    bit i % 4, votes +1/-1 on bit i."""
+    votes = [0] * 64
+    for tok, n in Counter(text.split(" ")).items():
+        h = hashlib.md5(tok.encode()).hexdigest()
+        for i in range(64):
+            votes[i] += n if (int(h[i // 4], 16) >> (i % 4)) & 1 else -n
+    return votes
+
+
+def _md5_simhash_ref(text: str) -> tuple[int, int]:
+    v = sum(1 << i for i, c in enumerate(_md5_votes(text)) if c > 0)
+    return v >> 32, v & 0xFFFFFFFF
+
+
+# tokens Java's \s leaves whole and str.split() would cut: NBSP, U+3000,
+# the \x1c-\x1f separators; plus multi-byte UTF-8 and case variants
+_ADVERSARIAL = [
+    "alpha", "b\u00e9ta", "\u65e5\u672c\u8a9e", "x\u00a0y", "x\u3000y",
+    "\x1f", "q\x1cr", "s\x1dt\x1e", "TOK", "tok", "\u2603", "z",
+]
+
+
+def _check_kernel(texts):
+    hi, lo = md5_simhash_batch(texts)
+    assert hi.dtype == lo.dtype == np.int64
+    assert list(zip(hi.tolist(), lo.tolist())) == [
+        _md5_simhash_ref(t) for t in texts]
+
+
+def test_md5_simhash_batch_matches_bruteforce(monkeypatch):
+    rng = np.random.default_rng(11)
+    texts = [
+        " ".join(rng.choice(_ADVERSARIAL, size=rng.integers(1, 12)))
+        for _ in range(300)
+    ]
+    texts += ["solo", "\u00a0", "dup dup dup", "b\u00e9ta"]
+    _check_kernel(texts)
+    monkeypatch.setattr(simhash, "_TOKEN_CHUNK", 5)
+    _check_kernel(texts)  # documents straddle every chunk edge
+
+
+def test_md5_simhash_batch_vote_ties_unset():
+    # two tokens: every bit where their md5s differ ties at 0 -> unset
+    texts = ["a b", "b a", "a b a b", "one two three four"]
+    assert any(c == 0 for c in _md5_votes("a b"))
+    _check_kernel(texts)
+    hi, lo = md5_simhash_batch(texts)
+    assert hi[0] == hi[1] == hi[2] and lo[0] == lo[1] == lo[2]
+
+
+def test_md5_simhash_batch_empty_and_long():
+    hi, lo = md5_simhash_batch([])
+    assert hi.shape == lo.shape == (0,)
+    rng = np.random.default_rng(12)
+    vocab = [f"w{i}" for i in range(50)]
+    long_doc = " ".join(rng.choice(vocab, size=simhash._TOKEN_CHUNK + 1234))
+    _check_kernel(["first doc", long_doc, "last doc"])
+    with pytest.raises(ValueError):
+        md5_simhash_batch(["ok", None])
 
 
 def test_mix_keys_unique():

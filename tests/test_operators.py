@@ -218,6 +218,89 @@ def test_exact_dedup_survivor(spark):
     assert len(dup) == 1 and dup[0]["keep_id"] == 3  # normalized + min id
 
 
+def _simhash_docs(n=600, seed=5):
+    """Texts DuckDB and Spark normalize alike, built to trip a kernel that
+    splits on anything but " ": multi-byte UTF-8, NBSP / U+3000 / \\x1c-
+    \\x1f inside tokens and at text ends, tab/CR/LF/VT/FF runs, repeats,
+    NULL/empty/blank."""
+    import random
+
+    rng = random.Random(seed)
+    pieces = ["alpha", "b\u00e9ta", "\u65e5\u672c", "x\u00a0y", "x\u3000y",
+              "\x1f", "q\x1cr", "TOK", "tok", "\u2603", "z", "", "dup", "dup"]
+    seps = [" ", "  ", "\t", "\r\n", "\n", " \t ", "\x0b\f", "\u3000",
+            "\x1f"]
+    texts = [
+        "".join(rng.choice(pieces) + rng.choice(seps)
+                for _ in range(rng.randint(0, 20)))
+        for _ in range(n)
+    ]
+    return texts + [None, "", "   ", "\t\n", texts[7], texts[9]]
+
+
+def _duckdb_rows(sql, rows, id_type):
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    con.register("d", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    con.execute(f"CREATE TABLE documents AS SELECT CAST(doc_id AS {id_type}) "
+                "AS doc_id, text FROM d")
+    return sorted(con.execute(sql).fetchall())
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_simhash_signatures_match_duckdb(spark, id_type):
+    """The Arrow batch kernel equals DuckDB's generated vote SQL, over
+    several input partitions and several Arrow batches each."""
+    from customer_er_spark.operators.dedup import (
+        _simhash_signature_sql,
+        simhash_signatures,
+    )
+
+    texts = _simhash_docs()
+    rows = [(i if id_type == "long" else f"d{i:05d}", t)
+            for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "50")  # >= 2 batches per task
+    try:
+        sig = simhash_signatures(df.repartition(3), shuffle_partitions=2)
+        got = sorted(tuple(r) for r in sig.collect())
+    finally:
+        spark.conf.set(key, old)
+    assert dict(sig.dtypes)["doc_id"] == {"long": "bigint"}.get(id_type, id_type)
+    want = _duckdb_rows(_simhash_signature_sql("documents"), rows,
+                        {"long": "BIGINT"}.get(id_type, "VARCHAR"))
+    assert len(got) > 500 and got == want
+
+
+def test_simhash_pairs_match_duckdb_oracle(spark):
+    from customer_er_spark.operators.dedup import (
+        simhash_oracle_sql,
+        simhash_pairs,
+        simhash_signatures,
+    )
+
+    rows = list(enumerate(_simhash_docs()))
+    df = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
+    pairs = simhash_pairs(df, hamming_max=6, max_band_size=1 << 30)
+    got = sorted(tuple(r) for r in pairs.collect())
+    pairs.unpersist()
+    want = _duckdb_rows(simhash_oracle_sql(hamming_max=6), rows, "BIGINT")
+    assert len(want) > 100 and got == want
+
+    # shuffle_partitions=None: a one-partition input fans out to the
+    # session's width, not a literal
+    assert simhash_signatures(df.coalesce(1)).rdd.getNumPartitions() == int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+
+    empty = simhash_signatures(df.limit(0))
+    assert empty.columns == ["doc_id", "sim_hi", "sim_lo"]
+    assert empty.count() == 0
+
+
 def test_ngram_prefix_filter_matches_bruteforce_on_skew(spark):
     """Skewed corpus: one ubiquitous stopword phrase in every doc.  The
     prefix-filtered join must produce IDENTICAL above-threshold output to

@@ -88,10 +88,9 @@ def main() -> None:
     from customer_er_spark.operators.dedup import simhash_pairs
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    dump("simhash_pairs (pure-Catalyst md5 SimHash: explode tokens -> 64 "
-         "codegen vote aggs -> multi-index pair-of-chunks bands (C(8,2)=28 "
-         "16-bit keys) -> salted co-partitioned self-join with "
-         "full-Hamming gate -> distinct; NO Python UDF)",
+    dump("simhash_pairs (md5 SimHash in one mapInArrow batch kernel -> "
+         "multi-index pair-of-chunks bands (C(8,2)=28 16-bit keys) -> salted "
+         "co-partitioned self-join with full-Hamming gate -> distinct)",
          simhash_pairs(docs, hamming_max=6))
 
     from customer_er_spark.operators.similarity import lsh_topk
